@@ -49,8 +49,13 @@ def _lit_double_array(vec) -> "F.Column":
     F.lit form costs a py4j round trip per element — for a 64-dim vector
     times n_centroids that alone dominated query construction. `repr` is
     the shortest exact round-trip of a double and the `D` suffix forces a
-    DOUBLE literal (a bare decimal parses as DECIMAL in Spark SQL)."""
-    return F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")")
+    DOUBLE literal (a bare decimal parses as DECIMAL in Spark SQL). A NaN
+    or infinite component has no such literal and raises ValueError."""
+    vals = [float(x) for x in vec]
+    for i, x in enumerate(vals):
+        if not math.isfinite(x):
+            raise ValueError(f"vector component {i} is not finite: {x!r}")
+    return F.expr("array(" + ", ".join(f"{x!r}D" for x in vals) + ")")
 
 
 def brute_force_topk(
@@ -413,8 +418,8 @@ def embedding_near_dup_pairs(
       test compares them pair-for-pair on the fixture corpus.
 
     Within-cell work is O(cell²); `bucket_cap` bounds it (VERDICT r2 #2):
-    each cell keeps its `bucket_cap` lowest-id vectors via row_number —
-    the same hot-bucket cap as the MinHash/SimHash band joins — so one
+    each cell keeps its `bucket_cap` lowest-id vectors
+    (operators/dedup.cap_buckets, the MinHash/SimHash band cap) — so one
     boilerplate mega-cell can't produce an unbounded pair explosion at
     10^12-doc scale. The cap is deterministic (id-ordered) and NEVER
     silent: log `near_dup_cell_stats(emb, bucket_col, bucket_cap)` beside
@@ -429,14 +434,9 @@ def embedding_near_dup_pairs(
         _as_double(F.col(vec_col)).alias("_v"),
     )
     if bucket_cap is not None:
-        from pyspark.sql import Window
+        from inspectehr_spark.operators.dedup import cap_buckets
 
-        wb = Window.partitionBy("_bkt").orderBy("vec_id")
-        staged = (
-            staged.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") <= bucket_cap)
-            .drop("_rn")
-        )
+        staged = cap_buckets(staged, ["_bkt"], "vec_id", bucket_cap)
     if engine == "arrow":
         return staged.groupBy("_bkt").applyInPandas(
             _near_dup_cell_kernel(threshold),

@@ -3,9 +3,11 @@
 The reference only has coincident-key duplicate flagging
 (R/evaluate_duplication.R); web-scale training-data pipelines need near-dup
 too. Everything here is expression-level (hash/xxhash64/transform over
-arrays) — no Python in the hot path. The LSH band join is an equi-join on
-(band_id, band_hash), which Spark shuffles by the band key: candidate pairs
-only, never the O(n²) cross product.
+arrays) — no Python in the hot path. Every banded near-dup path (MinHash,
+SimHash, the md5 registry replay, the streaming battery) takes its
+candidates from `band_pairs`: an equi-join on (band_id, band_key), which
+Spark shuffles by the band key — candidate pairs only, never the O(n²)
+cross product — over buckets capped by `cap_buckets`.
 
 IMPORTANT evaluation-cost rule observed throughout: any expression used
 inside a higher-order-function lambda is first MATERIALIZED as a column
@@ -16,7 +18,7 @@ documents. Staging makes them once-per-row bound references.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -88,6 +90,70 @@ def with_minhash_signature(
     )
 
 
+def cap_buckets(
+    df: DataFrame, keys: list[str], id_col: str, cap: int
+) -> DataFrame:
+    """Keep the `cap` lowest-`id_col` rows of every `keys` bucket — the
+    hot-bucket cap of every banded near-dup join, and the rule each of
+    their oracles replays (ROW_NUMBER() OVER (PARTITION BY keys ORDER BY
+    id) <= cap). A boilerplate mega-bucket (templated or empty text)
+    would otherwise turn the band self-join O(n²); rows past the cap miss
+    only the candidates that bucket would have given them. Nothing counts
+    the dropped rows. Spark plans the filter as a map-side
+    WindowGroupLimit before the bucket exchange, so a hot bucket ships at
+    most `cap` rows per map partition."""
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= cap)
+        .drop("_rn")
+    )
+
+
+def band_pairs(
+    df: DataFrame,
+    id_col: str,
+    bands: Column,
+    bucket_cap: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Banded LSH candidate pairs: explode `bands` (a Column of
+    array<struct<band_id, band_key>> built over `df`), cap each
+    (band_id, band_key) bucket (`cap_buckets`), self-join on the bucket
+    with a.id < b.id — a keyed equi-join, never the O(n²) cross product.
+
+    Returns (<id>_a, <id>_b, *<carry>_a, *<carry>_b), one row per id
+    pair. `carry` columns ride through the join (a sketch the caller
+    verifies on); callers that carry nothing join their payload back by
+    id."""
+    cols = [id_col, *carry]
+    banded = cap_buckets(
+        df.select(*cols, F.explode(bands).alias("_band")).select(
+            *cols, "_band.band_id", "_band.band_key"
+        ),
+        ["band_id", "band_key"],
+        id_col,
+        bucket_cap,
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    ida, idb = f"{id_col}_a", f"{id_col}_b"
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(ida),
+            F.col(f"b.{id_col}").alias(idb),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+        )
+        .dropDuplicates([ida, idb])
+    )
+
+
 def minhash_lsh_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -101,13 +167,13 @@ def minhash_lsh_duplicates(
     """Near-duplicate pairs via MinHash + banded LSH.
 
     shingle → signature → `bands` band hashes → candidate pairs share
-    (band_id, band_hash) → verify estimated Jaccard (signature agreement
+    (band_id, band_key) → verify estimated Jaccard (signature agreement
     fraction) ≥ threshold. Returns (doc_id_a, doc_id_b, est_jaccard), a < b.
 
     Scale: the only shuffles are the band-key self-join and the final
-    dedup; both keyed equi-ops. Hot buckets (boilerplate) are capped at
-    `bucket_cap` docs via row_number — the cap is logged at the metrics
-    layer in a real run, never silent-dropped without trace.
+    dedup; both keyed equi-ops (`band_pairs`). Hot buckets keep their
+    `bucket_cap` lowest ids (`cap_buckets`). The signature rides through
+    the band join.
     """
     rows_per_band = num_hashes // bands
     from inspectehr_spark.tables import parallel_scan
@@ -125,46 +191,18 @@ def minhash_lsh_duplicates(
         num_hashes=num_hashes,
     ).select("doc_id", "sig")
 
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.xxhash64(
+                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
+                ).alias("band_key"),
             )
-        ).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
-
-    wb = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
+            for b in range(bands)
+        ]
     )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
+    pairs = band_pairs(sigs, "doc_id", band_arr, bucket_cap, carry=("sig",))
     est = (
         F.size(
             F.filter(
@@ -184,24 +222,37 @@ def with_simhash(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "simhash",
-    bits: int = 64,
 ) -> DataFrame:
     """Add a 64-bit SimHash over word tokens, pure SQL, in ONE aggregate
-    pass: the accumulator is an array<int>(bits) of per-bit ±1 vote tallies
-    updated via zip_with, then the bit votes fold into the fingerprint long.
+    pass: the accumulator is an array<int>(64) of per-bit ±1 vote tallies
+    updated via zip_with (one traversal of the token hashes — VERDICT r1
+    #5), then the bit votes fold into the fingerprint long. Vote ties →
+    bit 0; null token lists → 0.
 
-    Round-1 shape evaluated `bits` independent aggregates (O(bits·n_tokens)
-    array traversals per row and a 64-term codegen giant — the slowest
-    bench query); this traverses the token hashes once (VERDICT r1 #5).
-    Fingerprints are bit-identical to the old formulation (majority vote
-    ties → bit 0, null/empty token lists → 0)."""
-    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+")).withColumn(
-        "_th", F.transform(F.col("_toks"), lambda t: F.xxhash64(t))
+    The token hash is ENGINE-REPLAYABLE: the first 16 hex chars of
+    md5(token), built as (hi << 32) | lo from two 8-hex-digit halves, so
+    DuckDB replays it verbatim via ``('0x'||substring(md5(t),1|9,8))::BIGINT``
+    (cross-checked against Spark's conv(substring(md5),16,10) on fixtures)
+    and the simhash registry queries get full value oracles."""
+    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+"))
+    staged = staged.withColumn(
+        "_md5", F.transform(F.col("_toks"), lambda t: F.md5(t))
     )
-    bit_positions = F.sequence(F.lit(0), F.lit(bits - 1))
+
+    def half(m, pos: int):
+        return F.conv(F.substring(m, pos, 8), 16, 10).cast("long")
+
+    staged = staged.withColumn(
+        "_th",
+        F.transform(
+            F.col("_md5"),
+            lambda m: F.shiftleft(half(m, 1), 32).bitwiseOR(half(m, 9)),
+        ),
+    )
+    bit_positions = F.sequence(F.lit(0), F.lit(63))
     votes = F.aggregate(
         F.col("_th"),
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), 64),
         lambda acc, h: F.zip_with(
             acc,
             F.transform(
@@ -217,7 +268,7 @@ def with_simhash(
         v = 1 << b
         return v - (1 << 64) if v >= (1 << 63) else v
 
-    pow2 = F.array(*[F.lit(signed_pow2(b)).cast("long") for b in range(bits)])
+    pow2 = F.array(*[F.lit(signed_pow2(b)).cast("long") for b in range(64)])
     fp = F.aggregate(
         F.zip_with(
             F.col("_votes"),
@@ -229,82 +280,10 @@ def with_simhash(
     )
     return staged.withColumn(
         out_col, F.coalesce(fp, F.lit(0).cast("long"))
-    ).drop("_toks", "_th", "_votes")
+    ).drop("_toks", "_md5", "_th", "_votes")
 
 
-def with_simhash_replayable(
-    df: DataFrame,
-    text_col: str = "text",
-    hi_col: str = "fp_hi",
-    lo_col: str = "fp_lo",
-) -> DataFrame:
-    """64-bit SimHash with ENGINE-REPLAYABLE token hashes: the token hash
-    is the first 16 hex chars of md5(token), carried as two 32-bit halves
-    (`hi_col` bits 63..32, `lo_col` bits 31..0) so every value fits a
-    signed BIGINT in any engine — DuckDB replays it verbatim via
-    ``('0x'||substring(md5(t),1,8))::BIGINT`` (cross-checked against
-    Spark's conv(substring(md5),16,10) on fixtures).
-
-    Same single-pass vote shape as `with_simhash` (one traversal of the
-    token hashes, zip_with accumulator — the VERDICT r1 #5 form), same
-    tie/empty semantics (vote ties → bit 0, null token lists → 0/0).
-    `with_simhash` (xxhash64) stays the scale path: one 64-bit hash per
-    token instead of an md5 + two string-slice conversions. This variant
-    exists so the simhash REGISTRY queries get full DuckDB value oracles
-    (the md5-minhash treatment, queries_episodes.q_minhash_band_signature)."""
-    staged = df.withColumn("_toks", F.split(F.col(text_col), r"\s+"))
-    staged = staged.withColumn(
-        "_md5", F.transform(F.col("_toks"), lambda t: F.md5(t))
-    )
-    staged = staged.withColumn(
-        "_th",
-        F.transform(
-            F.col("_md5"),
-            lambda m: F.struct(
-                F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("hi"),
-                F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("lo"),
-            ),
-        ),
-    )
-    bit_positions = F.sequence(F.lit(0), F.lit(63))
-    votes = F.aggregate(
-        F.col("_th"),
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                bit_positions,
-                lambda b: F.when(
-                    F.when(b < 32, F.getbit(h["lo"], b))
-                    .otherwise(F.getbit(h["hi"], b - 32)) == 1,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, d: a + d,
-        ),
-    )
-    staged = staged.withColumn("_votes", votes)
-
-    def _fold(offset: int):
-        pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-        return F.aggregate(
-            F.zip_with(
-                F.slice(F.col("_votes"), offset + 1, 32),
-                pow2,
-                lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    return (
-        staged.withColumn(lo_col, F.coalesce(_fold(0), F.lit(0).cast("long")))
-        .withColumn(hi_col, F.coalesce(_fold(32), F.lit(0).cast("long")))
-        .drop("_toks", "_md5", "_th", "_votes")
-    )
-
-
-def simhash_hamming_pairs_replayable(
+def simhash_hamming_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -312,74 +291,51 @@ def simhash_hamming_pairs_replayable(
     chunks: int = 4,
     bucket_cap: int = 64,
 ) -> DataFrame:
-    """`simhash_hamming_pairs` over the REPLAYABLE (md5 split-half)
-    simhash: identical banding/pigeonhole/cap/verify structure, fingerprint
-    carried as (hi, lo) 32-bit halves so DuckDB replays every step —
-    hamming = bit_count(xor(hi)) + bit_count(xor(lo)). See
-    `simhash_hamming_pairs` for the scheme; this backs the value-checked
-    registry query."""
-    if not 0 < chunks <= 64 or 64 % chunks:
-        raise ValueError("chunks must divide 64")
+    """Near-duplicate pairs by SimHash banding: the 64-bit fingerprint
+    (`with_simhash`) splits into `chunks` equal bands; by pigeonhole any
+    pair within `max_hamming` < `chunks` bit flips agrees on at least one
+    band, so candidates = pairs sharing (band_id, band value) — the
+    `band_pairs` self-join, never the O(n²) cross product. Verification
+    is exact: bit_count(a XOR b) <= max_hamming, JVM-side.
+
+    Returns (doc_id_a, doc_id_b, hamming), a < b. Hot bands (boilerplate
+    fingerprints) keep their `bucket_cap` lowest ids (`cap_buckets`)."""
+    if not 1 < chunks <= 64 or 64 % chunks:
+        raise ValueError("chunks must divide 64 and be at least 2")
     if max_hamming >= chunks:
         raise ValueError(
             "pigeonhole guarantee needs max_hamming < chunks "
             f"(got {max_hamming} >= {chunks})"
         )
     bandw = 64 // chunks
-    if bandw > 32 or 32 % bandw:
-        raise ValueError("band width must divide the 32-bit halves")
     mask = (1 << bandw) - 1
-    per_half = 32 // bandw
     from inspectehr_spark.tables import parallel_scan
 
     # r7: parallelize the one-file scan before the per-row vote math, and
-    # persist the (two-longs-per-doc) fingerprint table because the banded
+    # persist the (one-long-per-doc) fingerprint table because the banded
     # self-join consumes it on both sides — the broadcast side defeats
     # exchange reuse, so without the persist the sketch computed twice
-    sh = with_simhash_replayable(
+    sh = with_simhash(
         parallel_scan(df.select(id_col, text_col)), text_col=text_col
-    ).select(F.col(id_col).alias("doc_id"), "fp_hi", "fp_lo").persist()
+    ).select(F.col(id_col).alias("doc_id"), F.col("simhash").alias("fp")).persist()
 
-    def _band(b: int):
-        half = F.col("fp_lo") if b < per_half else F.col("fp_hi")
-        shift = (b % per_half) * bandw
-        return F.struct(
-            F.lit(b).alias("band_id"),
-            F.shiftrightunsigned(half, shift).bitwiseAND(F.lit(mask)).alias(
-                "band_val"
-            ),
-        )
-
-    banded = sh.select(
-        "doc_id",
-        "fp_hi",
-        "fp_lo",
-        F.explode(F.array(*[_band(b) for b in range(chunks)])).alias("band"),
-    ).select("doc_id", "fp_hi", "fp_lo", "band.band_id", "band.band_val")
-
-    wb = Window.partitionBy("band_id", "band_val").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.shiftrightunsigned("fp", b * bandw)
+                .bitwiseAND(F.lit(mask))
+                .alias("band_key"),
+            )
+            for b in range(chunks)
+        ]
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            (
-                F.bit_count(F.col("a.fp_hi").bitwiseXOR(F.col("b.fp_hi")))
-                + F.bit_count(F.col("a.fp_lo").bitwiseXOR(F.col("b.fp_lo")))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    pairs = band_pairs(sh, "doc_id", band_arr, bucket_cap, carry=("fp",))
+    return pairs.select(
+        "doc_id_a",
+        "doc_id_b",
+        F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def ngram_jaccard_pairs(
@@ -437,80 +393,6 @@ def with_dup_ngram_fraction(
         F.round(1.0 - F.size(F.array_distinct(F.col("_sh"))) / total, 6),
     ).otherwise(F.lit(0.0))
     return staged.withColumn(out_col, frac).drop("_sh")
-
-
-def simhash_hamming_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    chunks: int = 4,
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash banding: the 64-bit fingerprint
-    splits into `chunks` equal bands; by pigeonhole any pair within
-    `max_hamming` < `chunks` bit flips agrees on at least one band, so
-    candidates = pairs sharing (band_id, band_value) — a keyed equi
-    self-join, never the O(n²) cross product (same banding scheme as the
-    MinHash LSH join above). Verification is exact:
-    bit_count(a XOR b) <= max_hamming, JVM-side.
-
-    Returns (doc_id_a, doc_id_b, hamming), a < b. Hot bands (boilerplate
-    fingerprints) are capped at `bucket_cap` docs via row_number, as in
-    minhash_lsh_duplicates.
-    """
-    if not 0 < chunks <= 64 or 64 % chunks:
-        raise ValueError("chunks must divide 64")
-    if max_hamming >= chunks:
-        raise ValueError(
-            "pigeonhole guarantee needs max_hamming < chunks "
-            f"(got {max_hamming} >= {chunks})"
-        )
-    bandw = 64 // chunks
-    mask = (1 << bandw) - 1
-    sh = with_simhash(df.select(id_col, text_col), text_col=text_col).select(
-        F.col(id_col).alias("doc_id"), "simhash"
-    )
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned("simhash", b * bandw)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for b in range(chunks)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-
-    wb = Window.partitionBy("band_id", "band_val").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= bucket_cap
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def contamination_flags(

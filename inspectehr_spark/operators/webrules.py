@@ -113,10 +113,11 @@ def line_scrub(
     """C4-style line filter (Raffel et al. 2020 §2.2): keep only segments
     with at least `min_words` whitespace words and — when
     `require_terminal` — ending in terminal punctuation; rebuild the
-    document from the kept segments. Appends `<out_col>` (rebuilt text),
-    `lines_total`, `lines_kept`. Pure projection: the filter lambda uses
-    only its bound variable, so cost is linear in characters and the plan
-    stays inside whole-stage codegen's project."""
+    document from the kept segments. Appends `<out_col>` (rebuilt text,
+    NULL when no segment is kept), `lines_total`, `lines_kept`. Pure
+    projection: the filter lambda uses only its bound variable, so cost
+    is linear in characters and the plan stays inside whole-stage
+    codegen's project."""
     segs = _segments(text_col, sep)
 
     def keep(seg: Column) -> Column:
@@ -129,7 +130,7 @@ def line_scrub(
     return (
         df.withColumn("lines_total", F.size(segs).cast("long"))
         .withColumn("lines_kept", F.size(kept).cast("long"))
-        .withColumn(out_col, F.array_join(kept, sep))
+        .withColumn(out_col, F.when(F.size(kept) > 0, F.array_join(kept, sep)))
     )
 
 

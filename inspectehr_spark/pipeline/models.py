@@ -2,10 +2,11 @@
 perplexity. The pandas-UDF surface of the pipeline (the reference analog is
 the analyze_bg model scorer, /root/reference/R/analyse_bg.R:15-34).
 
-All three UDFs are vectorized over Arrow batches: extraction uses pandas
-str ops; langid is a doc×bigram count matrix times an integer weight
-matrix (numpy, exact int64); perplexity dictionary-encodes tokens and
-loops only over the UNIQUE-token dictionary, never over rows.
+Every stage is vectorized over Arrow batches: extraction (fused into
+`extract_score_udf` and `map_extract_score`) uses pandas str ops; langid
+is a doc×bigram count matrix times an integer weight matrix (numpy, exact
+int64); perplexity dictionary-encodes tokens and loops only over the
+UNIQUE-token dictionary, never over rows.
 
 A real deployment swaps `langid_udf`/`perplexity_udf` internals for
 fastText / KenLM model calls with the same batch shape; the models here
@@ -39,15 +40,6 @@ def _extract_series(html: pd.Series) -> pd.Series:
     for a, b in spec.UNESCAPES:
         res = res.str.replace(a, b, regex=False)
     return res
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """bytes → text per spec.extract_text_py, fully vectorized: C decode,
-    one non-greedy regex extract (first <p> to the first following </p> —
-    identical to the serial find/find), C replace chain. Byte-identical to
-    the serial labeler."""
-    return _extract_series(html)
 
 
 # vocab bigrams as packed codepoint pairs (a << 21 | b — codepoints < 2^21),

@@ -4,10 +4,10 @@ previously rows-only sketch queries (VERDICT r4 next-round #3).
 Technique = the md5 hash-replay the MinHash band-signature oracle proved
 (queries_episodes.q_minhash_band_signature): swap the engine-specific
 xxhash64 for md5-derived values BOTH engines compute identically, keep the
-operator structure (banding, caps, verification) bit-for-bit. The xxhash64
-operators in operators/dedup.py and ann.py remain the scale path — one
-64-bit hash per token beats an md5 + hex-slice — and stay unit-tested;
-these variants make the same *query semantics* hash-checkable end to end.
+operator structure (banding, caps, verification) bit-for-bit. SimHash has
+one implementation (dedup.with_simhash), md5-token-hashed, so the registry
+queries run the operator itself; the MinHash pair query replays the
+xxhash64 dedup.minhash_lsh_duplicates with md5 band hashes.
 
 Replay primitives (cross-checked Spark↔DuckDB on fixtures):
   token hash halves:  Spark conv(substring(md5(t),1|9,8),16,10)::long
@@ -67,18 +67,18 @@ sig AS (
 
 
 def q_simhash_fingerprints(spark, sf_dir):
-    """64-bit SimHash (md5 split-half token hashes, one-pass vote
-    aggregate) + bottom-8 md5 fingerprint per document — the replayable
-    variant of dedup.with_simhash + textfns.fingerprint, giving the
-    sketch its full value oracle (was rows-only r1-r4). Null-text docs
-    are excluded on both sides (see _SIMHASH_SIG_CTE note)."""
+    """64-bit SimHash (dedup.with_simhash: md5 token hashes, one-pass
+    vote aggregate) as its two 32-bit halves + bottom-8 md5 fingerprint
+    per document (textfns.fingerprint's shape), giving the sketch its
+    full value oracle (was rows-only r1-r4). Null-text docs are excluded
+    on both sides (see _SIMHASH_SIG_CTE note)."""
     from inspectehr_spark.tables import parallel_scan
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # r7: parallelize the one-file scan before the per-row sketch math
     # (tables.parallel_scan) — the vote accumulator and the bottom-8 md5
     # fingerprint are unchanged, they just no longer run on a single core
-    out = dedup.with_simhash_replayable(
+    out = dedup.with_simhash(
         parallel_scan(docs.select("doc_id", "text")), text_col="text"
     )
     staged = out.withColumn(
@@ -87,7 +87,12 @@ def q_simhash_fingerprints(spark, sf_dir):
     fp = F.md5(
         F.concat_ws(",", F.slice(F.array_sort(F.col("_md5")), 1, 8))
     )
-    return staged.select("doc_id", "fp_hi", "fp_lo", fp.alias("fingerprint"))
+    return staged.select(
+        "doc_id",
+        F.shiftrightunsigned("simhash", 32).alias("fp_hi"),
+        F.col("simhash").bitwiseAND(F.lit(0xFFFFFFFF)).alias("fp_lo"),
+        fp.alias("fingerprint"),
+    )
 
 
 SQL_SIMHASH_FINGERPRINTS = f"""
@@ -104,7 +109,7 @@ FROM sig s JOIN fp f USING (doc_id)
 
 
 # --------------------------------------------------------------------------
-# simhash_hamming_pairs — banded near-dup pairs over the replayable simhash
+# simhash_hamming_pairs — banded near-dup pairs over the md5-token simhash
 # --------------------------------------------------------------------------
 
 _SH_CHUNKS, _SH_MAXHAM, _SH_CAP = 16, 14, 64
@@ -112,13 +117,15 @@ _SH_CHUNKS, _SH_MAXHAM, _SH_CAP = 16, 14, 64
 
 def q_simhash_hamming_pairs(spark, sf_dir):
     """SimHash banded near-dup pairs (pigeonhole banding + exact bit_count
-    verify) over the replayable md5 split-half fingerprint — full value
-    oracle (was rows-only r4). Threshold loosened as before: the corpus
-    has no planted near-dups; operator exactness with constructed
-    near-dups stays unit-tested in tests/test_operators.py. Null-text
-    docs are excluded on both sides (see _SIMHASH_SIG_CTE note)."""
+    verify, dedup.simhash_hamming_pairs) — full value oracle (was
+    rows-only r4). The oracle carries the fingerprint as its 32-bit
+    (hi, lo) halves: hamming = bit_count(xor(hi)) + bit_count(xor(lo)).
+    Threshold loosened as before: the corpus has no planted near-dups;
+    operator exactness with constructed near-dups stays unit-tested in
+    tests/test_operators.py. Null-text docs are excluded on both sides
+    (see _SIMHASH_SIG_CTE note)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    pairs = dedup.simhash_hamming_pairs_replayable(
+    pairs = dedup.simhash_hamming_pairs(
         docs, max_hamming=_SH_MAXHAM, chunks=_SH_CHUNKS, bucket_cap=_SH_CAP
     )
     return pairs.select(
@@ -202,34 +209,12 @@ def q_minhash_lsh_pairs(spark, sf_dir):
                         "",
                         F.slice(F.col("_sig"), b * _MH_PER_BAND + 1, _MH_PER_BAND),
                     )
-                ).alias("band_hash"),
+                ).alias("band_key"),
             )
             for b in range(_MH_BANDS)
         ]
     )
-    banded = sig.select(
-        "doc_id", F.explode(bands).alias("f")
-    ).select("doc_id", "f.band_id", "f.band_hash")
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    banded = banded.withColumn("_rn", F.row_number().over(wb)).filter(
-        F.col("_rn") <= _MH_CAP
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
+    pairs = dedup.band_pairs(sig, "doc_id", bands, _MH_CAP)
     sa = sig.select(
         F.col("doc_id").alias("doc_id_a"), F.col("_sig").alias("_sa")
     )

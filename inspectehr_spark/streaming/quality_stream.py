@@ -406,8 +406,8 @@ def _near_dup_commit_batch(
 
     Hot-bucket backstop (`bucket_cap`, same role as in every batch band
     join): both the batch's banded rows and the history band index are
-    capped per (band_id, band_hash) bucket — ROW_NUMBER over the id order
-    — before joining, so one boilerplate mega-bucket (templated/empty
+    capped per (band_id, band_hash) bucket (operators/dedup.cap_buckets)
+    before joining, so one boilerplate mega-bucket (templated/empty
     text, or a hot historical band accumulated across batches) can never
     turn a micro-batch into an O(n²) self-join or stall the stream. Docs
     beyond the cap in a bucket can miss candidates through that bucket
@@ -439,12 +439,11 @@ def _near_dup_commit_batch(
     keyed equi-join; persist the history 'bands' table bucketed by
     band_hash at 10^12-doc scale so the join is storage-partitioned."""
     from inspectehr_spark.operators.dedup import (
+        cap_buckets,
         with_minhash_signature,
         with_shingles,
     )
     from inspectehr_spark.sources import snapshots as snap
-
-    from pyspark.sql import Window
 
     if _replayed(snap.latest_extra(root), ingest_id, batch_id):
         return 0
@@ -468,18 +467,19 @@ def _near_dup_commit_batch(
                 F.lit(b).alias("band_id"),
                 F.xxhash64(
                     F.slice(F.col("_nd_sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("band_hash"),
+                ).alias("band_key"),
             )
             for b in range(bands)
         ]
     )
-    banded = sigs.select(
-        "_nd_id", "_nd_sig", F.explode(band_arr).alias("b")
-    ).select("_nd_id", "_nd_sig", "b.band_id", "b.band_hash")
-    _wb = Window.partitionBy("band_id", "band_hash").orderBy("_nd_id")
-    banded = banded.withColumn("_rn", F.row_number().over(_wb)).filter(
-        F.col("_rn") <= bucket_cap
-    ).drop("_rn")
+    banded = cap_buckets(
+        sigs.select("_nd_id", "_nd_sig", F.explode(band_arr).alias("b")).select(
+            "_nd_id", "_nd_sig", "b.band_id", "b.band_key"
+        ),
+        ["band_id", "band_key"],
+        "_nd_id",
+        bucket_cap,
+    )
 
     est = (
         F.size(
@@ -504,25 +504,27 @@ def _near_dup_join_and_commit(
     batch_df, batch_id, root, id_col, banded, sigs, band_arr, est,
     jaccard_threshold, bucket_cap, partition_col, ingest_id, spark,
 ) -> int:
-    from pyspark.sql import Window
-
+    from inspectehr_spark.operators.dedup import band_pairs, cap_buckets
     from inspectehr_spark.sources import snapshots as snap
 
     # --- history near-dups: batch bands ⋈ committed band index ---
     losers = None
     try:
-        hist_bands = snap.read_table(spark, root, "bands").withColumnRenamed(
-            "_nd_id", "_hist_id"
+        hist_bands = cap_buckets(
+            snap.read_table(spark, root, "bands").select(
+                "band_id",
+                F.col("band_hash").alias("band_key"),
+                F.col("_nd_id").alias("_hist_id"),
+            ),
+            ["band_id", "band_key"],
+            "_hist_id",
+            bucket_cap,
         )
-        _wh = Window.partitionBy("band_id", "band_hash").orderBy("_hist_id")
-        hist_bands = hist_bands.withColumn(
-            "_rn", F.row_number().over(_wh)
-        ).filter(F.col("_rn") <= bucket_cap).drop("_rn")
         hist_sigs = snap.read_table(spark, root, "sigs").select(
             F.col("_nd_id").alias("_hist_id"), F.col("_nd_sig").alias("_hist_sig")
         )
         cand = (
-            banded.join(hist_bands, ["band_id", "band_hash"])
+            banded.join(hist_bands, ["band_id", "band_key"])
             .select("_nd_id", "_nd_sig", "_hist_id")
             .dropDuplicates(["_nd_id", "_hist_id"])
             .join(hist_sigs, "_hist_id")
@@ -532,20 +534,12 @@ def _near_dup_join_and_commit(
         pass                                   # first batch: empty history
 
     # --- within-batch near-dups: banded self-join, drop the larger id ---
-    a, b2 = banded.alias("a"), banded.alias("b")
-    within_pairs = (
-        a.join(
-            b2,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a._nd_id") < F.col("b._nd_id")),
-        )
-        .select(
-            F.col("a._nd_sig").alias("_nd_sig"),
-            F.col("b._nd_sig").alias("_hist_sig"),
-            F.col("b._nd_id").alias("_nd_id"),
-        )
-        .dropDuplicates(["_nd_id", "_nd_sig", "_hist_sig"])
+    within_pairs = band_pairs(
+        sigs, "_nd_id", band_arr, bucket_cap, carry=("_nd_sig",)
+    ).select(
+        F.col("_nd_sig_a").alias("_nd_sig"),
+        F.col("_nd_sig_b").alias("_hist_sig"),
+        F.col("_nd_id_b").alias("_nd_id"),
     )
     within_losers = (
         within_pairs.filter(est >= jaccard_threshold).select("_nd_id").distinct()
@@ -566,7 +560,7 @@ def _near_dup_join_and_commit(
         try:
             kept_bands = kept_sigs.select(
                 "_nd_id", "_nd_sig", F.explode(band_arr).alias("b")
-            ).select("b.band_id", "b.band_hash", "_nd_id")
+            ).select("b.band_id", F.col("b.band_key").alias("band_hash"), "_nd_id")
             hint = (snap.latest_version(root) or 0) + 1
             rel_rows = snap.write_table_data(
                 fresh, root, "stream", hint, partition_col=partition_col

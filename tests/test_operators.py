@@ -252,6 +252,32 @@ def test_simhash_hamming_pairs(spark):
         dedup.simhash_hamming_pairs(df, max_hamming=4, chunks=4)
 
 
+@pytest.mark.parametrize("op", ["minhash", "simhash"])
+def test_band_join_hot_bucket_cap(spark, op):
+    """cap + 3 identical documents put every band in one hot bucket: the
+    band join keeps the `cap` lowest ids of that bucket, so the result is
+    exactly the C(cap, 2) pairs among them — ids past the cap pair with
+    nobody (cap_buckets, replayed by every band-join oracle)."""
+    from itertools import combinations
+
+    cap = 4
+    ids = [17, 3, 11, 5, 29, 2, 8]  # cap + 3, unsorted on purpose
+    text = " ".join(f"w{i}" for i in range(30))
+    df = spark.createDataFrame(
+        [(i, text) for i in ids], "doc_id long, text string"
+    )
+    if op == "minhash":
+        out = dedup.minhash_lsh_duplicates(
+            df, num_hashes=16, bands=4, jaccard_threshold=0.5, bucket_cap=cap
+        )
+    else:
+        out = dedup.simhash_hamming_pairs(
+            df, max_hamming=3, chunks=4, bucket_cap=cap
+        )
+    got = sorted((r["doc_id_a"], r["doc_id_b"]) for r in out.collect())
+    assert got == list(combinations(sorted(ids)[:cap], 2))
+
+
 def test_evaluate_comparisons_decomposition(spark):
     """Lookup-driven battery + decomposition back to both sides
     (reference R/evaluate_comparison.R:101-192)."""
@@ -470,6 +496,20 @@ def test_embedding_near_dup_hot_cell_cap(spark):
     assert (stats[0]["n_vectors"], stats[0]["n_kept"], stats[0]["n_dropped"]) == (
         n, cap, n - cap,
     )
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_brute_force_topk_rejects_non_finite_query(spark, bad):
+    """A NaN/Inf query component has no SQL double literal: the vector
+    literal builder names the bad component instead of failing analysis
+    with an opaque parse error."""
+    from inspectehr_spark.ann import brute_force_topk
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="component 2"):
+        brute_force_topk(emb, [0.5, 1.0, bad], k=1)
 
 
 def test_near_dup_engines_agree(spark, sf_dir):

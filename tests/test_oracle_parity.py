@@ -66,3 +66,26 @@ def test_parity(spark, sf_dir, name, fn, sql):
     assert len(sr) == len(dr), f"{name}: row count {len(sr)} vs {len(dr)}"
     mismatches = [(a, b) for a, b in zip(sr, dr) if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+def test_line_scrub_all_lines_dropped_parity(spark, tmp_path):
+    """A document whose every line is under `min_words` keeps no segment:
+    its oracle rebuilds NULL (DuckDB array_to_string of an empty list),
+    and so must the operator — not ''."""
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * FROM (VALUES (1::BIGINT, 'a b the c d the e'), "
+        "(2::BIGINT, 'one two three four the x')) t(doc_id, text)) "
+        f"TO '{tmp_path}/documents.parquet' (FORMAT parquet)"
+    )
+    con.close()
+    fn, sql = QUERIES["line_scrub"]
+    sdf = fn(spark, str(tmp_path))
+    spark_rows = [tuple(r) for r in sdf.collect()]
+    con = _duck(str(tmp_path))
+    res = con.execute(sql)
+    duck_cols = [d[0] for d in res.description]
+    duck_rows = [tuple(r) for r in res.fetchall()]
+    con.close()
+    assert _norm_rows(sdf.columns, spark_rows) == _norm_rows(duck_cols, duck_rows)
+    assert {r[0]: r[3] for r in spark_rows} == {1: None, 2: "one two three four"}

@@ -371,3 +371,36 @@ def test_lang_token_fertility_single_bounded_agg(spark, sf_dir):
     fn, _ = QUERIES["lang_token_fertility"]
     df = fn(spark, sf_dir)
     assert inspect.exchange_count(df) <= 1, inspect.formatted_plan(df)
+
+
+def test_band_cap_bounds_hot_band_map_side(spark, sf_dir):
+    """The hot-bucket cap (dedup.cap_buckets under dedup.band_pairs) plans
+    as a Partial WindowGroupLimit directly below the exchange that
+    shuffles by (band_id, band_key): a hot band ships at most `cap` rows
+    per map partition, the bound on boilerplate skew."""
+    import re
+
+    for name in ("minhash_lsh_pairs", "simhash_hamming_pairs",
+                 "minhash_lsh_pairs_fast"):
+        plan = inspect.formatted_plan(QUERIES[name][0](spark, sf_dir))
+        details = {
+            int(m.group(1)): m.group(2)
+            for m in re.finditer(
+                r"^\((\d+)\) (\w+.*\n(?:(?!\(\d+\) ).*\n)*)", plan, re.M
+            )
+        }
+        capped = [
+            (int(ex), int(wgl))
+            for ex, wgl in re.findall(
+                r"\+- Exchange \((\d+)\)\n[ :|]*\+- WindowGroupLimit \((\d+)\)",
+                plan,
+            )
+        ]
+        band_keyed = [
+            (ex, wgl) for ex, wgl in capped
+            if re.search(r"Arguments: hashpartitioning\(band_id#\d+L?, band_key#",
+                         details[ex])
+            and re.search(r"\[band_id#\d+L?, band_key#\d+L?\], .*, Partial",
+                          details[wgl])
+        ]
+        assert band_keyed, (name, plan)
