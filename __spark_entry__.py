@@ -23,6 +23,9 @@ SF0001 = "/root/testdata/sf0.001"
 # thrice-green veterans go last.  Names absent from the registry are ignored
 # so this list can't break the contract.
 _DRIVER_PRIORITY = [
+    # rewritten onto operators/distribution.ks_pairwise: its new code path
+    # needs an oracle-checked row in the first 50
+    "ks_drift",
     # NEW r6 — PSL eTLD+1, the xxhash64 MinHash scale path (rows-only),
     # SemDeDup semantic dedup, temperature-rebalanced sampling, DSIR
     # importance weights, ExactSubstr span dedup, language deciles
@@ -93,7 +96,6 @@ _DRIVER_PRIORITY = [
     "url_normalize",
     "url_canonical_dedup",
     "decisions_history",
-    "pipeline_decisions",
     # veterans (green in r5, code untouched this round)
     "blocked_domain_audit",
     "minhash_lsh_pairs",
@@ -118,7 +120,6 @@ _DRIVER_PRIORITY = [
     "nhs_checksum",
     "icnarc_structure",
     "postcode_conformance",
-    "ks_drift",
     "pivot_user_types",
     "stack_wide_to_long",
     "events_outside_user_span",

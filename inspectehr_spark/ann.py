@@ -527,11 +527,9 @@ def semantic_dedup(
       hot-cell cap — O(cell^2) bounded, never all-pairs;
     - verdict: the loser-id set is DISTINCT pair losers (<= pairs, small
       relative to the corpus when the threshold is tight) joined back
-      BROADCAST — the same zero-wide-exchange verdict shape as the exact
-      dup flag in pipeline/run.py. At a LOOSE threshold losers can
+      BROADCAST — zero wide exchange. At a LOOSE threshold losers can
       approach corpus size; set ``broadcast_verdict=False`` to fall back
-      to a hash join (two exchanges, no driver-memory ceiling) — the same
-      strategy split as run.flag_exact_duplicates.
+      to a hash join (two exchanges, no driver-memory ceiling).
 
     Cosines round to 6dp before every comparison (rank order AND the
     threshold), so verdicts are ulp-stable and the DuckDB oracle replays

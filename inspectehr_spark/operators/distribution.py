@@ -4,14 +4,12 @@ Reference: ks_test over every site pair (R/evaluate_distribution.R:23-70),
 then a site fails when its KS distance exceeds a threshold against ALL
 other sites (:86-147, eval VA_AP_01).
 
-Two implementations:
-
-* `ks_pairwise` — fully distributed ECDF formulation: no collect, no
-  Python. For each group, cume_dist over values; align the two step
-  functions with a union + last-value-carried-forward window; the KS
-  statistic is max|F1 - F2|. Scales to arbitrarily large groups.
-* `ks_pairwise_pandas` — applyInPandas per group-pair for moderate group
-  cardinalities; simpler, exact, Arrow-batched.
+`ks_pairwise` is the one KS implementation (the `ks_drift`,
+`tod_ks_drift` and `drift_flagged_groups` registry queries all call it): a
+fully distributed ECDF formulation — no collect of data rows, no Python.
+For each group, cumulative counts over values; align the two step
+functions with a union + carried-forward window; the KS statistic is
+max|F1 - F2|. Scales to arbitrarily large groups.
 """
 
 from __future__ import annotations
@@ -60,7 +58,7 @@ def ks_pairwise(
     Build each group's ECDF (small relative to facts: one row per distinct
     value per group), cross the distinct group list with itself (tiny),
     union the two step functions per pair, carry each side's CDF forward
-    (last_value ignoring nulls over the merged value order), take
+    (running max over a RANGE frame in the merged value order), take
     max|F_a - F_b|. Returns (group_a, group_b, ks_stat).
 
     `max_groups` bounds the O(G²) pair fan-out — see `_group_pairs`.
@@ -70,8 +68,10 @@ def ks_pairwise(
     the two cume windows execute twice (once under each join branch). The
     ECDF is counts-sized (one row per distinct (group, value)), far
     smaller than the input facts."""
-    e = ecdf(df, group_col, value_col).persist()
+    # guard before the persist: a refused call must not leave a cached
+    # plan registered in the session
     groups = _group_pairs(df, group_col, max_groups)
+    e = ecdf(df, group_col, value_col).persist()
     pairs = [(a, b) for i, a in enumerate(groups) for b in groups[i + 1 :]]
     spark = df.sparkSession
     pairs_df = F.broadcast(
@@ -115,51 +115,6 @@ def ks_pairwise(
     )
     return stepped.groupBy("group_a", "group_b").agg(
         F.round(F.max(F.abs(F.col("fa") - F.col("fb"))), 6).alias("ks_stat")
-    )
-
-
-def ks_pairwise_pandas(
-    df: DataFrame, group_col: str, value_col: str, max_groups: int = 200
-) -> DataFrame:
-    """Exact two-sample KS per group pair via applyInPandas (Arrow-batched,
-    one group-pair per task). Memory bound: each task materializes BOTH
-    groups' full value vectors in one pandas frame (≈ 16 bytes × (n_a+n_b)
-    plus Arrow copies) — suitable only when every group pair fits an
-    executor's task memory; the distributed `ks_pairwise` is the scale
-    path. `max_groups` bounds the O(G²) pair fan-out (see `_group_pairs`);
-    note each value row is also replicated G-1 times into the pair frames,
-    so the cap guards shuffle volume here too."""
-    import numpy as np  # local import: executors only
-
-    e = df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-
-    def ks(pdf):
-        import pandas as pd
-
-        ga, gb = pdf["group_a"].iloc[0], pdf["group_b"].iloc[0]
-        a = np.sort(pdf.loc[pdf["side"] == "a", "v"].values)
-        b = np.sort(pdf.loc[pdf["side"] == "b", "v"].values)
-        allv = np.concatenate([a, b])
-        fa = np.searchsorted(a, allv, side="right") / max(len(a), 1)
-        fb = np.searchsorted(b, allv, side="right") / max(len(b), 1)
-        stat = float(np.max(np.abs(fa - fb))) if len(allv) else 0.0
-        return pd.DataFrame(
-            {"group_a": [ga], "group_b": [gb], "ks_stat": [round(stat, 6)]}
-        )
-
-    groups = _group_pairs(df, group_col, max_groups)
-    pairs = [(a, b) for i, a in enumerate(groups) for b in groups[i + 1 :]]
-    spark = df.sparkSession
-    pairs_df = F.broadcast(spark.createDataFrame(pairs, "group_a string, group_b string"))
-    ta = pairs_df.join(e, pairs_df.group_a == e.g).select(
-        "group_a", "group_b", F.lit("a").alias("side"), "v"
-    )
-    tb = pairs_df.join(e, pairs_df.group_b == e.g).select(
-        "group_a", "group_b", F.lit("b").alias("side"), "v"
-    )
-    both = ta.unionByName(tb)
-    return both.groupBy("group_a", "group_b").applyInPandas(
-        ks, "group_a string, group_b string, ks_stat double"
     )
 
 

@@ -212,7 +212,7 @@ def scrub_frequent_segments(
     Scale shape (10^12 docs): one explode, then
     1. frequent-set aggregation keyed by a salt-first 128-bit hash PAIR of
        the segment (never the text itself — same exchange rule as
-       `exact_duplicates`); countDistinct(doc) is a two-phase partial agg;
+       `run.flag_exact_duplicates`); countDistinct(doc) is a two-phase partial agg;
     2. the frequent set is joined back. Its size is bounded by
        total_segments / min_docs and in real corpora boilerplate vocab is
        tiny, so with `use_broadcast=True` (default) the aggregated side

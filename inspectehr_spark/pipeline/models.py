@@ -1,25 +1,25 @@
-"""Arrow-batched model-scoring stages: text extraction, language ID,
-perplexity. The pandas-UDF surface of the pipeline (the reference analog is
-the analyze_bg model scorer, /root/reference/R/analyse_bg.R:15-34).
+"""Arrow-batched model scoring: text extraction, language ID, perplexity.
+The Python stage of the pipeline (the reference analog is the analyze_bg
+model scorer, R/analyse_bg.R:15-34).
 
-Every stage is vectorized over Arrow batches: extraction (fused into
-`extract_score_udf` and `map_extract_score`) uses pandas str ops; langid
-is a doc×bigram count matrix times an integer weight matrix (numpy, exact
-int64); perplexity dictionary-encodes tokens and loops only over the
-UNIQUE-token dictionary, never over rows.
+`map_extract_score` is the one Python surface: a fused mapInArrow pass
+over raw Arrow batches. Its zero-Python twin is
+pipeline/models_native.enrich_native (run_pipeline's model_stage="native").
+Extraction uses pandas str ops; langid is a doc×bigram count matrix times
+an integer weight matrix (numpy, exact int64); perplexity
+dictionary-encodes tokens and loops only over the UNIQUE-token
+dictionary, never over rows.
 
-A real deployment swaps `langid_udf`/`perplexity_udf` internals for
-fastText / KenLM model calls with the same batch shape; the models here
-are deterministic stand-ins defined by pipeline/spec.py (the container has
-no fastText/KenLM — see SURVEY §7).
+A real deployment swaps the `_langid_series`/`_perplexity_series` internals
+for fastText / KenLM model calls with the same batch shape; the models here
+are deterministic stand-ins defined by pipeline/spec.py (fastText/KenLM
+are not dependencies of this package — see SURVEY §7).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from inspectehr_spark.pipeline import spec
@@ -97,11 +97,6 @@ def _langid_series(text: pd.Series) -> pd.Series:
     return pd.Series(best, index=text.index)
 
 
-@pandas_udf(StringType())
-def langid_udf(text: pd.Series) -> pd.Series:
-    return _langid_series(text)
-
-
 def _perplexity_series(text: pd.Series) -> pd.Series:
     """Mean integer token cost (spec.token_cost) per doc — the KenLM-query
     batch shape: explode → dictionary-encode → per-unique cost → segment
@@ -129,48 +124,6 @@ def _perplexity_series(text: pd.Series) -> pd.Series:
     return pd.Series(ppl, index=text.index)
 
 
-@pandas_udf(DoubleType())
-def perplexity_udf(text: pd.Series) -> pd.Series:
-    return _perplexity_series(text)
-
-
-_ENRICH_STRUCT = StructType(
-    [
-        StructField("text_x", StringType()),
-        StructField("lang_pred", StringType()),
-        StructField("perplexity", DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_ENRICH_STRUCT)
-def extract_score_udf(html: pd.Series) -> pd.DataFrame:
-    """FUSED extraction + langid + perplexity in ONE Arrow evaluation.
-
-    Splitting them into separate pandas UDFs makes every row cross the
-    JVM⇄Python socket twice (html→text, then text→scores): on this
-    workload over half the 8-core CPU went to kernel time moving those
-    bytes (measured 56% sys at 8 pinned cores vs 34% at 2 — the socket
-    syscall path, not compute, was the scaling limiter). One fused UDF
-    transfers html in and (text, lang, ppl) out once, halving boundary
-    bytes and syscalls; the per-column logic is byte-identical to the
-    standalone UDFs (shared helpers, property-tested against the serial
-    labeler).
-
-    The pipeline hot path now uses `map_extract_score` (mapInArrow —
-    skips this UDF's Arrow⇄pandas conversion layers); this struct UDF is
-    kept as the column-level surface and as the equivalence anchor the
-    mapInArrow path is tested against."""
-    txt = _extract_series(html)
-    return pd.DataFrame(
-        {
-            "text_x": txt,
-            "lang_pred": _langid_series(txt),
-            "perplexity": _perplexity_series(txt),
-        }
-    )
-
-
 def map_extract_score(df, html_col: str = "html"):
     """Fused extraction + langid + perplexity as ONE `mapInArrow` pass:
     consumes `html_col` and appends (text_x, lang_pred, perplexity).
@@ -188,14 +141,17 @@ def map_extract_score(df, html_col: str = "html"):
     into Arrow arrays — no struct-column assembly, no block-manager
     round trip, no index alignment.
 
-    Boundary-bytes contract: `html` crosses the socket ONCE (inbound; it
-    is consumed, never echoed back), results cross once (outbound) —
-    identical to the pandas-UDF shape. Passthrough columns cross twice,
-    so callers should drop dead-weight wide columns (e.g. the raw crawl
-    `text`) BEFORE this stage; run_pipeline does.
+    Fusing the three models matters as much: separate per-model UDFs made
+    every row cross the JVM⇄Python socket twice (html→text, then
+    text→scores), and on this workload over half the 8-core CPU went to
+    kernel time moving those bytes (56% sys at 8 pinned cores vs 34% at 2).
 
-    Byte-identical to `extract_score_udf` by construction (same helper
-    functions), asserted by an equivalence test."""
+    Boundary-bytes contract: `html` crosses the socket ONCE (inbound; it
+    is consumed, never echoed back), results cross once (outbound).
+    Passthrough columns cross twice, so callers should drop dead-weight
+    wide columns (e.g. the raw crawl `text`) BEFORE this stage;
+    run_pipeline does. Outputs are tested against the serial labeler
+    (pipeline/reference.py)."""
     import pyarrow as pa
 
     passthrough = [f for f in df.schema.fields if f.name != html_col]

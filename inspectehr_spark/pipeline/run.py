@@ -12,11 +12,8 @@ Stages (all declarative; Catalyst owns the physical plan):
     │      the r4-measured worker-socket/serialization scaling term)
     ├─ native heuristic features       → n_chars … dup_ngram_frac
     ├─ exact-dup verdicts              → is_duplicate
-    │     dup_strategy="window": hash-pair-keyed window (ONE wide
-    │       exchange, 16-byte keys, text never in the key)
-    │     dup_strategy="broadcast": narrow (url, h1, h2) shuffle only +
-    │       broadcast of the duplicate-url set — ZERO wide exchange,
-    │       rows keep input clustering scan→sink
+    │     (hash-pair-keyed window: ONE wide exchange, 16-byte keys,
+    │      text never in the key)
     ├─ rule battery                    → failure_log(url, check_code, …)
     ├─ decide (column-wise anti-join)  → keep / first_fail_code
     ├─ scrub chain (JVM regex)         → scrubbed_text
@@ -25,12 +22,10 @@ Stages (all declarative; Catalyst owns the physical plan):
        parquet with a bounded write salt, versioned: time travel +
        rollback; Iceberg writeTo(...) on a real catalog)
 
-Scale notes: with the window strategy the only wide operation is the
-exact-dup exchange (128-bit hash-pair key; collision odds at 10^12 docs
-≈ 1e-15, see flag_exact_duplicates); with the broadcast strategy no wide
-data moves at all and the broadcast is bounded by the duplicate SET size
-(fallback documented in flag_exact_duplicates_broadcast). Sinks write at
-(p_date × salt) parallelism so a few hot dates can't cap the write stage.
+Scale notes: the only wide operation is the exact-dup exchange (128-bit
+hash-pair key; collision odds at 10^12 docs ≈ 1e-15, see
+flag_exact_duplicates). Sinks write at (p_date × salt) parallelism so a
+few hot dates can't cap the write stage.
 """
 
 from __future__ import annotations
@@ -114,8 +109,12 @@ def enrich(pages: DataFrame) -> DataFrame:
     )
 
 
-def flag_exact_duplicates(enriched: DataFrame) -> DataFrame:
-    """is_duplicate: same extracted text as a doc with smaller url.
+def flag_exact_duplicates(
+    df: DataFrame, text_col: str = "text_x", id_col: str = "url"
+) -> DataFrame:
+    """is_duplicate: same `text_col` as a row with a smaller `id_col`
+    (keep-first by lowest id — explicit stable ordering). The one
+    exact-duplicate verdict; the pipeline calls it on text_x/url.
     Shuffle key = two 64-bit xxhash64 values — the text never enters the
     partitioning expression, so the exchange carries a 16-byte key per row
     instead of duplicating the widest column into the key (VERDICT r1 #3).
@@ -128,71 +127,10 @@ def flag_exact_duplicates(enriched: DataFrame) -> DataFrame:
     has collision odds ≈ 1e-15 at 10^12 docs, so within-group equality
     verification (a full-text sort) is deliberately omitted."""
     w = Window.partitionBy(
-        F.xxhash64("text_x"), F.xxhash64(F.lit(1), "text_x")
-    ).orderBy("url")
-    return enriched.withColumn(
+        F.xxhash64(text_col), F.xxhash64(F.lit(1), text_col)
+    ).orderBy(id_col)
+    return df.withColumn(
         "is_duplicate", F.row_number().over(w) > 1
-    )
-
-
-def flag_exact_duplicates_broadcast(
-    enriched: DataFrame, max_broadcast_urls: int | None = 50_000_000
-) -> DataFrame:
-    """Same verdicts as `flag_exact_duplicates`, ZERO wide exchange.
-
-    PRECONDITION: `url` uniquely identifies a row (the corpus primary key,
-    as in the reference's per-url decision table). With duplicate urls the
-    url-keyed verdict join would both fan out rows and mark every row
-    bearing a losing url — diverging from the window strategy, which keeps
-    exactly one survivor per text. The pipeline's input contract
-    guarantees uniqueness; callers with dirty urls must pre-dedup or use
-    `flag_exact_duplicates`.
-
-    The window formulation shuffles every WIDE row (text_x + features) by
-    the hash pair; at 10^12 rows that exchange dominates the job. Here
-    only a NARROW (url, h1, h2) projection shuffles — ~24 bytes/row — to
-    find the non-keeper urls, and that (typically small: dup-rate ×
-    corpus) url set is broadcast back as a hash join, so the wide rows
-    never leave their input partitioning (which then also feeds the
-    partitioned sinks with no further exchange).
-
-    Scale bound, enforced: the broadcast is the duplicate SET, not the
-    corpus. `max_broadcast_urls` caps it — when the loser set exceeds the
-    cap this DEGRADES to the window strategy (identical verdicts, wide
-    exchange) instead of driving the forced broadcast into driver OOM.
-    Pass None to skip the guard count (one extra narrow job) when the dup
-    rate is known-bounded. The survivor (lowest url per 128-bit hash
-    pair) is identical to the window formulation; equality is
-    unit-asserted for both strategies."""
-    narrow = enriched.select(
-        "url",
-        F.xxhash64("text_x").alias("_h1"),
-        F.xxhash64(F.lit(1), "text_x").alias("_h2"),
-    )
-    losers = (
-        narrow.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_h1", "_h2").orderBy("url")
-            ),
-        )
-        .filter(F.col("_rn") > 1)
-        .select("url", F.lit(True).alias("_dup"))
-    )
-    if max_broadcast_urls is not None:
-        # The guard count runs the narrow shuffle once eagerly; on the
-        # (common) pass path the join recomputes it — deliberately NOT
-        # persisted: a persist here would pin up to `max_broadcast_urls`
-        # rows in executor storage for the session (leak), and the
-        # recompute is the cheap 24-byte/row projection. In run_pipeline
-        # the enrichment feeding it is already cached, so the recompute
-        # reads the cache, not the UDF stage.
-        if losers.count() > max_broadcast_urls:
-            return flag_exact_duplicates(enriched)
-    return (
-        enriched.join(F.broadcast(losers), "url", "left")
-        .withColumn("is_duplicate", F.coalesce(F.col("_dup"), F.lit(False)))
-        .drop("_dup")
     )
 
 
@@ -309,7 +247,6 @@ def run_pipeline(
     out_dir: str,
     resume: bool = True,
     salt_partitions: int | None = None,
-    dup_strategy: str = "window",
     tox_terms_path: str | None = None,
     store: "SnapshotStore | None" = None,
     model_stage: str = "arrow",
@@ -419,24 +356,10 @@ def run_pipeline(
         _enrich = enrich
     else:
         raise ValueError(f"unknown model_stage: {model_stage!r}")
-    if dup_strategy == "window":
-        # one wide pass: the dup window's exchange carries the rows once
-        flagged = failure_flags(flag_exact_duplicates(_enrich(pages))).drop(
-            "warc_ts", "lang"
-        )
-        cached = flagged = flagged.persist()
-    elif dup_strategy == "broadcast":
-        # zero wide exchange: dup verdicts come from a NARROW projection
-        # of the cache (the UDF runs once — both consumers read the
-        # persisted enrichment), broadcast-joined back; the wide rows
-        # keep the input (p_date, salt) clustering all the way to the
-        # sinks. See flag_exact_duplicates_broadcast for the scale bound.
-        cached = _enrich(pages).persist()
-        flagged = failure_flags(flag_exact_duplicates_broadcast(cached)).drop(
-            "warc_ts", "lang"
-        )
-    else:
-        raise ValueError(f"unknown dup_strategy: {dup_strategy!r}")
+    # one wide pass: the dup window's exchange carries the rows once
+    flagged = failure_flags(flag_exact_duplicates(_enrich(pages))).drop(
+        "warc_ts", "lang"
+    ).persist()
     scrub_chain = (
         spec.build_scrub_chain(tox_terms=spec.load_tox_terms(tox_terms_path))
         if tox_terms_path
@@ -492,7 +415,7 @@ def run_pipeline(
         _mark("t_manifest")
         n_parts = len(done)
     finally:
-        cached.unpersist()
+        flagged.unpersist()
     return {"partitions_processed": n_parts, "rows": n_rows, "timings": t}
 
 

@@ -28,7 +28,8 @@ UNESCAPES = (("&lt;", "<"), ("&gt;", ">"), ("&amp;", "&"))  # amp LAST
 
 
 def extract_text_py(html: bytes) -> str:
-    """Serial extraction (also the exact behavior the pandas UDF batches)."""
+    """Serial extraction (also the exact behavior models.map_extract_score
+    batches)."""
     s = html.decode("utf-8", errors="strict")
     i = s.find(P_OPEN)
     j = s.find(P_CLOSE, i + len(P_OPEN)) if i >= 0 else -1

@@ -130,50 +130,11 @@ FROM d
 def q_ks_drift(spark, sf_dir):
     """Two-sample Kolmogorov–Smirnov between event_type groups on `value`
     (reference ks_test over site pairs, R/evaluate_distribution.R:23-70),
-    as a pure window/join formulation — the no-collect scale path."""
+    through the distributed ECDF operator — the no-collect scale path."""
+    from inspectehr_spark.operators.distribution import ks_pairwise
+
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    counts = ev.groupBy("event_type", "value").agg(F.count(F.lit(1)).alias("c"))
-    w = (
-        Window.partitionBy("event_type").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot = Window.partitionBy("event_type")
-    # r7: persisted — both probe sides consume the ECDF, and without the
-    # persist the counts agg + cume windows execute twice (counts-sized)
-    e = counts.select(
-        "event_type", "value",
-        (F.sum("c").over(w) / F.sum("c").over(tot)).alias("cdf"),
-    ).persist()
-    types = sorted(r[0] for r in ev.select("event_type").distinct().collect())
-    pairs = [(a, b) for i, a in enumerate(types) for b in types[i + 1 :]]
-    pairs_df = F.broadcast(
-        spark.createDataFrame(pairs, "group_a string, group_b string")
-    )
-    ea = e.select(F.col("event_type").alias("group_a"), F.col("value").alias("v"), F.col("cdf").alias("cdf_a"))
-    eb = e.select(F.col("event_type").alias("group_b"), F.col("value").alias("v"), F.col("cdf").alias("cdf_b"))
-    left = pairs_df.join(ea, "group_a").select(
-        "group_a", "group_b", "v", "cdf_a", F.lit(None).cast("double").alias("cdf_b")
-    )
-    right = pairs_df.join(eb, "group_b").select(
-        "group_a", "group_b", "v", F.lit(None).cast("double").alias("cdf_a"), "cdf_b"
-    )
-    # RANGE-frame carry-forward (r7): the frame spans the full tie group
-    # at v, so the (pair, v) collapse aggregation (an exchange) is gone;
-    # max over a nondecreasing CDF == its value at v (see
-    # operators/distribution.ks_pairwise)
-    merged = left.unionByName(right)
-    ws = (
-        Window.partitionBy("group_a", "group_b").orderBy("v")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    stepped = merged.select(
-        "group_a", "group_b",
-        F.coalesce(F.max("cdf_a").over(ws), F.lit(0.0)).alias("fa"),
-        F.coalesce(F.max("cdf_b").over(ws), F.lit(0.0)).alias("fb"),
-    )
-    return stepped.groupBy("group_a", "group_b").agg(
-        F.round(F.max(F.abs(F.col("fa") - F.col("fb"))), 6).alias("ks_stat")
-    )
+    return ks_pairwise(ev, "event_type", "value")
 
 
 SQL_KS_DRIFT = """

@@ -21,8 +21,7 @@ def q_near_dup_survivors(spark, sf_dir):
     pointer-doubled min-label propagation) → survivor = smallest vec_id
     per cluster → verdict joined back over the FULL embedding table
     (vectors in no cluster survive trivially). The loser set is the
-    broadcast side — exactly the pipeline's broadcast dup-verdict shape
-    (pipeline/run.flag_exact_duplicates_broadcast)."""
+    broadcast side of the verdict join."""
     from inspectehr_spark.ann import embedding_near_dup_pairs
     from inspectehr_spark.operators.graph import connected_components
 

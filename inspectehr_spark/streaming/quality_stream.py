@@ -74,7 +74,7 @@ def stream_first_seen(
 ) -> DataFrame:
     """Streaming exact-dedup: emit only the FIRST occurrence of each key
     across the stream's lifetime — the ingest-time analog of the batch
-    keep-first window (operators/dedup.exact_duplicates), implemented as a
+    keep-first window (pipeline/run.flag_exact_duplicates), implemented as a
     custom stateful operator with applyInPandasWithState.
 
     Within a micro-batch the survivor is chosen by `order_col` ascending

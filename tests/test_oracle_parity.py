@@ -89,3 +89,25 @@ def test_line_scrub_all_lines_dropped_parity(spark, tmp_path):
     con.close()
     assert _norm_rows(sdf.columns, spark_rows) == _norm_rows(duck_cols, duck_rows)
     assert {r[0]: r[3] for r in spark_rows} == {1: None, 2: "one two three four"}
+
+
+def _spark_entry():
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_driver_priority_names_every_query_once():
+    """The correctness sweep checks the first 50 names of the entry
+    module's ordering against the oracles; the priority list must name
+    each registry query exactly once, and the rewritten ks_drift must sit
+    inside that window."""
+    mod = _spark_entry()
+    prio = mod._DRIVER_PRIORITY
+    assert len(prio) == len(set(prio)), sorted(n for n in set(prio) if prio.count(n) > 1)
+    assert set(prio) == set(QUERIES)
+    assert "ks_drift" in list(mod.queries())[:50]

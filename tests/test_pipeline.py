@@ -263,49 +263,6 @@ def test_resume_is_idempotent_and_incremental(spark, fixture_corpus, tmp_path_fa
     assert not wrong, wrong[:5]
 
 
-def test_dup_strategies_agree_and_broadcast_plan(spark, fixture_corpus, tmp_path_factory):
-    """run_pipeline(dup_strategy="broadcast") emits byte-identical
-    decisions to the window strategy, and its flagging plan has no wide
-    exchange: the only hashpartitioning carries the narrow (url, h1, h2)
-    projection and the verdicts come back via BroadcastHashJoin."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from inspectehr_spark.pipeline.run import (
-        enrich,
-        flag_exact_duplicates,
-        flag_exact_duplicates_broadcast,
-        run_pipeline,
-    )
-
-    path, planted, labels = fixture_corpus
-    out = str(tmp_path_factory.mktemp("out_bc"))
-    run_pipeline(spark, path, out, resume=False, salt_partitions=8,
-                 dup_strategy="broadcast")
-    out_w = str(tmp_path_factory.mktemp("out_w"))
-    run_pipeline(spark, path, out_w, resume=False, salt_partitions=8,
-                 dup_strategy="window")
-    assert _decisions(spark, out) == _decisions(spark, out_w)
-
-    with pytest.raises(ValueError):
-        run_pipeline(spark, path, out, resume=False, dup_strategy="nope")
-
-    # plan shape: wide side never exchanges; dup verdicts broadcast back
-    pages = spark.read.parquet(path).withColumn(
-        "p_date", F.to_date("warc_ts").cast("string")
-    )
-    en = enrich(pages).drop("html", "text")
-    plan = flag_exact_duplicates_broadcast(en)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    for args in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
-        assert "text_x" not in args and "_m" not in args, args
-    # the windowed formulation's exchange carries the wide projection;
-    # the broadcast one must not reference it anywhere in an Exchange
-    wide_plan = flag_exact_duplicates(en)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in wide_plan
-
-
 def test_null_warc_ts_resumes_cleanly(spark, tmp_path_factory):
     """A NULL warc_ts must land in the sentinel partition, resume without
     crashing sorted() over the date set, and never re-append (the NULL

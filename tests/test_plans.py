@@ -64,10 +64,10 @@ def test_exact_dup_shuffle_key_excludes_text(spark, sf_dir):
     expression (it would double the shuffled bytes on the widest column)."""
     import re
 
-    from inspectehr_spark.operators.dedup import exact_duplicates
+    from inspectehr_spark.pipeline.run import flag_exact_duplicates
     from inspectehr_spark.tables import table
 
-    df = exact_duplicates(table(spark, sf_dir, "documents"))
+    df = flag_exact_duplicates(table(spark, sf_dir, "documents"), "text", "doc_id")
     plan = inspect.formatted_plan(df)
     parts = re.findall(r"hashpartitioning\(([^\n]*)", plan)
     assert parts, plan

@@ -51,27 +51,35 @@ def test_word_ngrams_parity(spark, texts):
         assert got[i] == expect, repr(t)
 
 
+def _scored(spark, texts):
+    """Each text through the pipeline's model stage as <p>text</p>: TEXT has
+    no '<' or '&', so extraction returns the text unchanged."""
+    from inspectehr_spark.pipeline.models import map_extract_score
+
+    pages = spark.createDataFrame(
+        [(i, f"<p>{t}</p>".encode()) for i, t in enumerate(texts)], "i long, html binary"
+    )
+    got = {r["i"]: r for r in map_extract_score(pages).collect()}
+    for i, t in enumerate(texts):
+        assert got[i]["text_x"] == t, repr(t)
+    return got
+
+
 @settings(max_examples=3, deadline=None)
 @given(st.lists(TEXT, min_size=1, max_size=150))
 def test_langid_udf_matches_serial(spark, texts):
-    from inspectehr_spark.pipeline.models import langid_udf
-
-    df = _batch(spark, texts)
-    got = {r["i"]: r["l"] for r in df.select("i", langid_udf("text").alias("l")).collect()}
+    got = _scored(spark, texts)
     for i, t in enumerate(texts):
-        assert got[i] == reference.langid_serial(t), repr(t)
+        assert got[i]["lang_pred"] == reference.langid_serial(t), repr(t)
 
 
 @settings(max_examples=3, deadline=None)
 @given(st.lists(TEXT, min_size=1, max_size=150))
 def test_perplexity_udf_matches_serial(spark, texts):
-    from inspectehr_spark.pipeline.models import perplexity_udf
-
-    df = _batch(spark, texts)
-    got = {r["i"]: r["p"] for r in df.select("i", perplexity_udf("text").alias("p")).collect()}
+    got = _scored(spark, texts)
     for i, t in enumerate(texts):
         expect = reference.perplexity_serial(spec.tokenize_py(t))
-        assert abs(got[i] - expect) < 1e-9, repr(t)
+        assert abs(got[i]["perplexity"] - expect) < 1e-9, repr(t)
 
 
 # ---------------------------------------------------------------------------
@@ -218,17 +226,12 @@ def test_scrub_non_ascii_adversarial_parity(spark):
     assert one[1] == "ſlurx y"          # no Unicode folding
 
 
-def test_map_extract_score_matches_struct_udf(spark):
-    """The mapInArrow hot path and the pandas struct UDF are the same
-    helpers behind different boundaries — byte-identical outputs, all
-    passthrough columns preserved, html consumed."""
-    from pyspark.sql import functions as F
-
+def test_map_extract_score_matches_serial(spark):
+    """The mapInArrow model stage against the serial labeler on generated
+    pages: extraction, langid and perplexity per url, all passthrough
+    columns preserved, html consumed."""
     from inspectehr_spark.pipeline.corpus import generate_pages
-    from inspectehr_spark.pipeline.models import (
-        extract_score_udf,
-        map_extract_score,
-    )
+    from inspectehr_spark.pipeline.models import map_extract_score
 
     rows, _ = generate_pages(n=200, seed=11)
     pages = spark.createDataFrame(
@@ -242,13 +245,12 @@ def test_map_extract_score_matches_struct_udf(spark):
         r["url"]: (r["text_x"], r["lang_pred"], r["perplexity"])
         for r in got.collect()
     }
-    want = {
-        r["url"]: (r["m"]["text_x"], r["m"]["lang_pred"], r["m"]["perplexity"])
-        for r in pages.select(
-            "url", extract_score_udf("html").alias("m")
-        ).collect()
-    }
-    assert got_rows == want
+    assert len(got_rows) == len(rows)
+    for url, _ts, html, _text, _lang in rows:
+        text_x = spec.extract_text_py(html)
+        want_ppl = reference.perplexity_serial(spec.tokenize_py(text_x))
+        assert got_rows[url][:2] == (text_x, reference.langid_serial(text_x)), url
+        assert abs(got_rows[url][2] - want_ppl) < 1e-9, url
 
 
 # Injected moderation lists the chain must stay byte-deterministic over:
