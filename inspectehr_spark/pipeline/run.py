@@ -297,6 +297,7 @@ def run_pipeline(
     # rows would reprocess and re-append every run) and a None that
     # poisons sorted() over the committed date set. Null dates land in an
     # explicit sentinel partition instead.
+    # Inferred, not readers.PAGES_SCHEMA: pyarrow pages carry warc_ts as timestamp_ntz.
     pages = spark.read.parquet(pages_path).withColumn(
         "p_date",
         F.coalesce(F.to_date("warc_ts").cast("string"), F.lit("__no_date__")),

@@ -7,6 +7,7 @@ commit history — with nothing but parquet files and a manifest directory,
 so the same semantics hold in any environment:
 
     <root>/data/c<version>-<uuid>/part-*.parquet   (immutable once committed)
+    <root>/data/c<version>-<uuid>/_schema.json     (the directory's read schema)
     <root>/_manifests/v<version>.json              (file list + summary)
 
 A snapshot = one manifest listing every data directory visible at that
@@ -27,6 +28,11 @@ version. Commit protocol (single-writer-wins optimistic concurrency):
 Readers list `_manifests/`, pick the max version (or an explicit one) and
 read exactly the files it names — a half-written data directory is never
 visible, and a reader holding version K is isolated from later commits.
+Each data directory records its schema in `_schema.json` when it is
+written (Spark skips `_`-prefixed files, so the sidecar is never read as
+data), and a read passes it to the scan instead of running a
+schema-inference job per directory — Iceberg likewise keeps the schema in
+table metadata.
 At cluster scale the manifest store must be an atomic-rename filesystem or
 a catalog service (HDFS/local rename is atomic; S3 needs a DynamoDB-style
 lock — same caveat Iceberg's HadoopCatalog documents).
@@ -44,9 +50,11 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
+_SCHEMA = "_schema.json"
 
 
 class CommitConflict(RuntimeError):
@@ -500,14 +508,27 @@ def _commit(root: str, operation: str, new_dirs: list[str], keep_prior: bool,
     raise CommitConflict(f"lost {max_retries} commit races at {root}")
 
 
-def _write_data(df: DataFrame, root: str, version_hint: int,
-                partition_col: str | None) -> str:
-    rel = os.path.join(_DATA, f"c{version_hint}-{uuid.uuid4().hex[:12]}")
+def _write_dir(df: DataFrame, root: str, rel: str,
+               partition_col: str | None) -> str:
+    """Write `df` as the new data directory `rel` under `root`, then record
+    in its `_schema.json` the schema a read of it returns: the data
+    columns, then the partition column (partition discovery puts it last),
+    each with the type the writer wrote."""
+    path = os.path.join(root, rel)
     w = df.write.mode("error")
     if partition_col:
         w = w.partitionBy(partition_col)
-    w.parquet(os.path.join(root, rel))
+    w.parquet(path)
+    fields = sorted(df.schema.fields, key=lambda f: f.name == partition_col)
+    with open(os.path.join(path, _SCHEMA), "w") as fh:
+        fh.write(StructType(fields).json())
     return rel
+
+
+def _write_data(df: DataFrame, root: str, version_hint: int,
+                partition_col: str | None) -> str:
+    rel = os.path.join(_DATA, f"c{version_hint}-{uuid.uuid4().hex[:12]}")
+    return _write_dir(df, root, rel, partition_col)
 
 
 def append(df: DataFrame, root: str, partition_col: str | None = None) -> int:
@@ -563,11 +584,7 @@ def write_table_data(
     """Write `df` as an (invisible until committed) data directory of table
     `name` under `root`; returns the manifest-relative path."""
     rel = os.path.join(name, _DATA, f"c{version_hint}-{uuid.uuid4().hex[:12]}")
-    w = df.write.mode("error")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(os.path.join(root, rel))
-    return rel
+    return _write_dir(df, root, rel, partition_col)
 
 
 def commit_transaction(
@@ -657,6 +674,16 @@ def read_snapshot(
     return _read_dirs(spark, root, dirs)
 
 
+def _read_dir(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        with open(os.path.join(path, _SCHEMA)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        # Written before directories carried a schema: infer it (one job).
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _read_dirs(spark: SparkSession, root: str, dirs: list[str]) -> DataFrame:
     """Union of per-directory scans. Each committed data directory is read
     as its own root (hive partition dirs discovered beneath it) and the
@@ -664,10 +691,17 @@ def _read_dirs(spark: SparkSession, root: str, dirs: list[str]) -> DataFrame:
     CONFLICTING_DIRECTORY_STRUCTURES check because sibling c<N>-<uuid>
     dirs share no common partition base. Exactly Iceberg's shape: the
     manifest enumerates per-snapshot file groups, the scan is their
-    union."""
+    union.
+
+    Each scan takes its schema from the directory's `_schema.json`, so
+    building the DataFrame runs no Spark job, and a partition column
+    reads back with the type it was written with (a `p_date` string stays
+    a string, whatever its values look like). A directory without the
+    sidecar — one written before sidecars existed — is read by
+    inference."""
     from functools import reduce
 
-    frames = [spark.read.parquet(os.path.join(root, d)) for d in dirs]
+    frames = [_read_dir(spark, os.path.join(root, d)) for d in dirs]
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 

@@ -120,12 +120,12 @@ def test_metrics_cover_all_partitions_and_checks(spark, pipeline_out):
 
     rows = mets.collect()
     # metrics are partitioned by partition_id on disk; the dir key reads
-    # back type-inferred (date) — compare stringified
+    # back as the string it was written as (the data dir's _schema.json)
     parts = {str(r["partition_id"]) for r in rows}
     checks = {r["check_code"] for r in rows}
     assert checks == set(spec.CHECKS)
     dec = read_sink(spark, out, "decisions")
-    # partitionBy writes p_date as a dir key that reads back as DATE
+    # partitionBy writes p_date as a dir key that reads back as a string too
     assert parts == {
         str(r["p_date"]) for r in dec.select("p_date").distinct().collect()
     }

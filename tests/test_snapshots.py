@@ -508,3 +508,80 @@ def test_txn_keep_prior_false_records_txn_replace(spark, tmp_path):
     ops = [h["operation"] for h in snap.history(root)]
     assert ops == ["txn", "txn-replace"]
     assert _ids(snap.read_table(spark, root, "t")) == [5, 6]
+
+
+def _dated(spark, lo, hi, p_date):
+    return spark.range(lo, hi).selectExpr("id", f"'{p_date}' AS p_date")
+
+
+def _rows(df):
+    return sorted((r["id"], r["p_date"]) for r in df.collect())
+
+
+def test_sidecar_schema_fixes_partition_type(spark, tmp_path):
+    """Each data directory records its schema in `_schema.json`, so the
+    string partition column reads back as the string it was written as,
+    whether or not a `__no_date__` sentinel partition is present. Inferred
+    from its values, `p_date` would read as a date until the sentinel
+    appears."""
+    root = str(tmp_path / "tbl")
+    rel = snap.write_table_data(_dated(spark, 0, 3, "2024-01-01"), root, "t", 1, "p_date")
+    assert os.path.isfile(os.path.join(root, rel, "_schema.json"))
+    snap.commit_transaction(root, {"t": [rel]})
+    rel = snap.write_table_data(
+        _dated(spark, 3, 5, "2024-01-02").union(_dated(spark, 5, 6, "__no_date__")),
+        root, "t", 2, "p_date",
+    )
+    snap.commit_transaction(root, {"t": [rel]})
+    for v in (1, 2):
+        assert snap.read_table(spark, root, "t", version=v).schema.simpleString() == (
+            "struct<id:bigint,p_date:string>"
+        )
+    assert _rows(snap.read_table(spark, root, "t")) == (
+        [(i, "2024-01-01") for i in range(3)]
+        + [(3, "2024-01-02"), (4, "2024-01-02"), (5, "__no_date__")]
+    )
+
+
+def test_dir_without_sidecar_reads_by_inference(spark, tmp_path):
+    """A directory written before sidecars existed has none: it is still
+    read, with the schema Spark infers."""
+    root = str(tmp_path / "tbl")
+    snap.append(_df(spark, 0, 3), root, partition_col="v")
+    snap.append(_df(spark, 3, 5), root, partition_col="v")
+    old = snap._read_manifest(root, 1)["dirs"][0]
+    os.unlink(os.path.join(root, old, "_schema.json"))
+    got = snap.read_snapshot(spark, root)
+    assert _ids(got) == [0, 1, 2, 3, 4]
+    assert sorted(r["v"] for r in got.collect()) == [0, 10, 20, 30, 40]
+
+
+def test_compact_writes_sidecar(spark, tmp_path):
+    root = str(tmp_path / "tbl")
+    for k in range(3):
+        snap.append(_dated(spark, k * 5, k * 5 + 3, f"2024-01-0{k + 1}"), root, "p_date")
+    before = _rows(snap.read_snapshot(spark, root))
+    v = snap.compact(spark, root, partition_col="p_date")
+    (rel,) = snap._read_manifest(root, v)["dirs"]
+    assert os.path.isfile(os.path.join(root, rel, "_schema.json"))
+    got = snap.read_snapshot(spark, root)
+    assert got.schema.simpleString() == "struct<id:bigint,p_date:string>"
+    assert _rows(got) == before
+
+
+def test_read_sink_builds_without_jobs(spark, tmp_path, count_jobs):
+    """Building the read_sink DataFrames of a 4-commit store, latest and
+    every earlier version, launches no Spark job: each directory's scan
+    takes its schema from the sidecar instead of inferring it."""
+    from inspectehr_spark.pipeline.run import read_sink
+
+    root = str(tmp_path / "out")
+    for k in range(4):
+        rel = snap.write_table_data(
+            _dated(spark, k * 5, k * 5 + 3, f"2024-01-0{k + 1}"),
+            root, "decisions", k + 1, "p_date",
+        )
+        snap.commit_transaction(root, {"decisions": [rel]})
+    assert count_jobs(lambda: [
+        read_sink(spark, root, "decisions", version=v) for v in (None, 1, 2, 3)
+    ]) == 0
