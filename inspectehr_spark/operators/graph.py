@@ -47,7 +47,8 @@ def _components_single_task(
     smaller root always wins, so each root IS the component minimum. Same
     contract as the iterative path: one row per node incident to an edge,
     component = smallest reachable id. No driver collect — the edge list
-    stays on an executor."""
+    stays on an executor. `src` and `dst` must share a type and hold no
+    null (connected_components checks both before choosing this path)."""
     node_t = dict(edges.dtypes)[src]
     schema = f"node {node_t}, component {node_t}"
 
@@ -110,10 +111,21 @@ def connected_components(
     dict). `stats["rounds"] = 0` marks the small path. Set the threshold
     to 0 to force the iterative path (the deep-chain pointer-doubling
     test does). The decision is input-size-driven, never cluster-size
-    tuned, so a 100 TB pair set takes the iterative path unchanged."""
-    if small_graph_threshold > 0:
+    tuned, so a 100 TB pair set takes the iterative path unchanged.
+
+    The union-find needs one comparable, non-null id type. Edges whose
+    `src` and `dst` types differ, or that hold a null id (counted in the
+    same job as the size), take the iterative path whatever their size:
+    there Spark coerces both ends to a common type, and a null id becomes
+    a (null, null) row that links to nothing."""
+    types = dict(edges.dtypes)
+    if small_graph_threshold > 0 and types[src] == types[dst]:
         cached = edges.persist()
-        if cached.count() <= small_graph_threshold:
+        n, n_null = cached.agg(
+            F.count(F.lit(1)),
+            F.count_if(F.col(src).isNull() | F.col(dst).isNull()),
+        ).first()
+        if n <= small_graph_threshold and not n_null:
             if stats is not None:
                 stats["rounds"] = 0
             return _components_single_task(cached, src, dst)

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from inspectehr_spark.pipeline import spec
+from inspectehr_spark.pipeline.run import heuristic_features
 
 
 def _sql_str(s: str) -> str:
@@ -168,41 +169,4 @@ def enrich_native(pages: DataFrame, html_col: str = "html") -> DataFrame:
         html_col
     )
     staged = with_native_models(staged)
-    return _native_features(staged)
-
-
-def _native_features(df: DataFrame) -> DataFrame:
-    """The enrich() heuristic feature block (run.py) over an existing
-    text_x column — same expressions, same staging discipline."""
-    from inspectehr_spark.functions.textfns import ALL_STOPWORDS, word_ngrams
-
-    toks = F.col("_toks")
-    n_chars = F.length("text_x")
-    n_tokens = F.size(toks)
-    no_space = n_chars - F.size(F.split(F.col("text_x"), " ")) + 1
-    mean_wl = F.when(n_tokens > 0, no_space.cast("double") / n_tokens)
-    clean = F.length(F.regexp_replace("text_x", r"[^A-Za-z0-9 ]", ""))
-    sym_ratio = F.when(n_chars > 0, (n_chars - clean).cast("double") / n_chars)
-    sw = F.size(F.filter(toks, lambda t: F.lower(t).isin(*ALL_STOPWORDS)))
-    sw_ratio = F.when(n_tokens > 0, sw.cast("double") / n_tokens)
-    tris_h = F.transform(F.col("_tris"), lambda t: F.xxhash64(t))
-    dupng = F.when(
-        F.size(F.col("_tris")) > 0,
-        1.0 - F.size(F.array_distinct(tris_h)) / F.size(F.col("_tris")),
-    ).otherwise(F.lit(0.0))
-    return (
-        df.withColumn(
-            "_toks", F.filter(F.split(F.col("text_x"), " "), lambda t: t != "")
-        )
-        .withColumn("_tris", word_ngrams(F.col("_toks"), 3))
-        .select(
-            "*",
-            n_chars.alias("n_chars"),
-            n_tokens.alias("n_tokens"),
-            mean_wl.alias("mean_word_len"),
-            sym_ratio.alias("symbol_ratio"),
-            sw_ratio.alias("stopword_ratio"),
-            dupng.alias("dup_ngram_frac"),
-        )
-        .drop("_toks", "_tris")
-    )
+    return heuristic_features(staged)

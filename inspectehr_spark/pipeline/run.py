@@ -20,7 +20,8 @@ Stages (all declarative; Catalyst owns the physical plan):
     └─ sinks: decisions / failures / metrics as ONE atomic snapshot
        transaction (sources/snapshots.py manifest commit — partitioned
        parquet with a bounded write salt, versioned: time travel +
-       rollback; Iceberg writeTo(...) on a real catalog)
+       rollback; Iceberg writeTo(...) on a real catalog); the run's
+       counts are observed on the decisions write, not queried
 
 Scale notes: the only wide operation is the exact-dup exchange (128-bit
 hash-pair key; collision odds at 10^12 docs ≈ 1e-15, see
@@ -32,11 +33,12 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inspectehr_spark.sources.store import FileSnapshotStore, SnapshotStore
 
+from inspectehr_spark.functions.sqltext import sql_str_list
 from inspectehr_spark.functions.textfns import ALL_STOPWORDS, word_ngrams
 from inspectehr_spark.pipeline import spec
 from inspectehr_spark.pipeline.models import map_extract_score
@@ -49,27 +51,34 @@ def enrich(pages: DataFrame) -> DataFrame:
     back); all other input columns pass through, plus text_x / lang_pred /
     perplexity and the native heuristic features. Drop unread wide columns
     (the raw crawl `text`) before calling — passthrough columns cross the
-    worker boundary twice.
+    worker boundary twice."""
+    # ONE fused mapInArrow stage (extract + langid + perplexity): html
+    # crosses the JVM⇄Python boundary once and is CONSUMED there (not
+    # echoed back); raw Arrow batches skip the pandas-UDF evaluator's
+    # Arrow⇄pandas conversion layers entirely (see
+    # models.map_extract_score for the measured rationale).
+    return heuristic_features(map_extract_score(pages))
 
-    Staged projections, not one: `_toks` (and `_tris`) are MATERIALIZED as
-    array columns before any higher-order function references them. A
-    lambda body that embeds a non-attribute expression re-evaluates that
-    expression PER ELEMENT (Catalyst inlines it into the lambda), which is
-    quadratic on large documents — staging turns it into a once-per-row
-    bound reference. Projections collapse into one codegen stage anyway;
-    this costs no extra pass over the data.
-    """
-    toks = F.col("_toks")
-    n_chars = F.length("text_x")
-    n_tokens = F.size(toks)
+
+# Plan builders below write their per-check and per-literal lists as SQL
+# text: one parse on the JVM side instead of a py4j round trip per Column
+# operator (enrich's stopword isin alone was 265 calls). Float thresholds
+# carry the `D` suffix — a bare decimal parses as DECIMAL, the Column
+# API's float literal is DOUBLE — so the analyzed plans are the
+# Column-built ones.
+_FEATURES = (
+    "length(text_x) AS n_chars",
+    "size(_toks) AS n_tokens",
     # chars minus count(' '): count(' ') = size(split)-1
-    no_space = n_chars - F.size(F.split(F.col("text_x"), " ")) + 1
-    mean_wl = F.when(n_tokens > 0, no_space.cast("double") / n_tokens)
-    clean = F.length(F.regexp_replace("text_x", r"[^A-Za-z0-9 ]", ""))
-    sym_ratio = F.when(n_chars > 0, (n_chars - clean).cast("double") / n_chars)
-    sw = F.size(F.filter(toks, lambda t: F.lower(t).isin(*ALL_STOPWORDS)))
-    sw_ratio = F.when(n_tokens > 0, sw.cast("double") / n_tokens)
-    tris = word_ngrams(toks, 3)
+    "CASE WHEN size(_toks) > 0 THEN CAST(length(text_x)"
+    " - size(split(text_x, ' ')) + 1 AS DOUBLE) / size(_toks) END"
+    " AS mean_word_len",
+    "CASE WHEN length(text_x) > 0 THEN CAST(length(text_x)"
+    " - length(regexp_replace(text_x, '[^A-Za-z0-9 ]', '')) AS DOUBLE)"
+    " / length(text_x) END AS symbol_ratio",
+    "CASE WHEN size(_toks) > 0 THEN CAST(size(filter(_toks, t -> lower(t)"
+    f" IN ({sql_str_list(ALL_STOPWORDS)}))) AS DOUBLE) / size(_toks) END"
+    " AS stopword_ratio",
     # Distinct-count over HASHED trigrams: array_distinct on a STRING
     # array is O(n²) (Spark's hash-set fast path covers primitive types
     # only) — on a 150 kB doc that is ~25k trigrams → ~6×10^8 string
@@ -79,32 +88,28 @@ def enrich(pages: DataFrame) -> DataFrame:
     # turns array_distinct into the O(n) long-array path; a 64-bit
     # within-doc collision (≤25k values) shifts the ratio by 1/n with
     # probability ~3×10^-11 — far below the keep/drop threshold scale.
-    tris_h = F.transform(F.col("_tris"), lambda t: F.xxhash64(t))
-    dupng = F.when(
-        F.size(F.col("_tris")) > 0,
-        1.0 - F.size(F.array_distinct(tris_h)) / F.size(F.col("_tris")),
-    ).otherwise(F.lit(0.0))
+    "CASE WHEN size(_tris) > 0 THEN 1.0D - size(array_distinct("
+    "transform(_tris, t -> xxhash64(t)))) / size(_tris) ELSE 0.0D END"
+    " AS dup_ngram_frac",
+)
 
+
+def heuristic_features(df: DataFrame) -> DataFrame:
+    """The native heuristic feature block over an existing text_x column
+    (n_chars … dup_ngram_frac), shared by enrich and
+    models_native.enrich_native.
+
+    Staged projections, not one: `_toks` (and `_tris`) are MATERIALIZED as
+    array columns before any higher-order function references them. A
+    lambda body that embeds a non-attribute expression re-evaluates that
+    expression PER ELEMENT (Catalyst inlines it into the lambda), which is
+    quadratic on large documents — staging turns it into a once-per-row
+    bound reference. Projections collapse into one codegen stage anyway;
+    this costs no extra pass over the data."""
     return (
-        # ONE fused mapInArrow stage (extract + langid + perplexity): html
-        # crosses the JVM⇄Python boundary once and is CONSUMED there (not
-        # echoed back); raw Arrow batches skip the pandas-UDF evaluator's
-        # Arrow⇄pandas conversion layers entirely (see
-        # models.map_extract_score for the measured rationale).
-        map_extract_score(pages)
-        .withColumn(
-            "_toks", F.filter(F.split(F.col("text_x"), " "), lambda t: t != "")
-        )
-        .withColumn("_tris", tris)
-        .select(
-            "*",
-            n_chars.alias("n_chars"),
-            n_tokens.alias("n_tokens"),
-            mean_wl.alias("mean_word_len"),
-            sym_ratio.alias("symbol_ratio"),
-            sw_ratio.alias("stopword_ratio"),
-            dupng.alias("dup_ngram_frac"),
-        )
+        df.withColumn("_toks", F.expr("filter(split(text_x, ' '), t -> t != '')"))
+        .withColumn("_tris", word_ngrams(F.col("_toks"), 3))
+        .selectExpr("*", *_FEATURES)
         .drop("_toks", "_tris")
     )
 
@@ -134,47 +139,52 @@ def flag_exact_duplicates(
     )
 
 
+def _between(x: str, lo: str, hi: str) -> str:
+    # Column.between's own expansion, so the analyzed plan is unchanged
+    return f"({x} >= {lo} AND {x} <= {hi})"
+
+
+_FLAG_SQL = {
+    "doc_length": "NOT "
+    + _between("CAST(n_chars AS DOUBLE)", f"{spec.LEN_LO!r}D", f"{spec.LEN_HI!r}D"),
+    "word_count": "NOT "
+    + _between("CAST(n_tokens AS DOUBLE)", f"{spec.TOK_LO!r}D", f"{spec.TOK_HI!r}D"),
+    "mean_word_length": "(mean_word_len IS NOT NULL AND NOT "
+    + _between("mean_word_len", f"{spec.MWL_LO!r}D", f"{spec.MWL_HI!r}D") + ")",
+    "symbol_ratio": f"(symbol_ratio IS NOT NULL AND symbol_ratio > {spec.SYM_HI!r}D)",
+    "stopword_ratio":
+        f"(stopword_ratio IS NOT NULL AND stopword_ratio < {spec.SW_LO!r}D)",
+    "dup_ngram_frac": f"dup_ngram_frac > {spec.DUPNG_HI!r}D",
+    "lang_allowed": f"NOT (lang IN ({sql_str_list(spec.ALLOWED_LANGS)}))",
+    "langid_agree": "lang_pred != lang",
+    "perplexity": f"perplexity > {spec.PPL_HI!r}D",
+    "warc_ts_bounds": "NOT " + _between(
+        "CAST(warc_ts AS TIMESTAMP)",
+        f"CAST('{spec.TS_LO_ISO.replace('T', ' ')}' AS TIMESTAMP)",
+        f"CAST('{spec.TS_HI_ISO.replace('T', ' ')}' AS TIMESTAMP)",
+    ),
+    "exact_duplicate": "is_duplicate",
+}
+_FLAGS = tuple(f"f_{code}" for code in spec.CHECKS)
+
+
 def failure_flags(df: DataFrame) -> DataFrame:
     """All spec checks as boolean columns (single codegen stage)."""
-    c = F.col
-    return df.select(
-        "*",
-        (~c("n_chars").cast("double").between(spec.LEN_LO, spec.LEN_HI)).alias("f_doc_length"),
-        (~c("n_tokens").cast("double").between(spec.TOK_LO, spec.TOK_HI)).alias("f_word_count"),
-        (
-            c("mean_word_len").isNotNull()
-            & ~c("mean_word_len").between(spec.MWL_LO, spec.MWL_HI)
-        ).alias("f_mean_word_length"),
-        (c("symbol_ratio").isNotNull() & (c("symbol_ratio") > spec.SYM_HI)).alias("f_symbol_ratio"),
-        (c("stopword_ratio").isNotNull() & (c("stopword_ratio") < spec.SW_LO)).alias("f_stopword_ratio"),
-        (c("dup_ngram_frac") > spec.DUPNG_HI).alias("f_dup_ngram_frac"),
-        (~c("lang").isin(*spec.ALLOWED_LANGS)).alias("f_lang_allowed"),
-        (c("lang_pred") != c("lang")).alias("f_langid_agree"),
-        (c("perplexity") > spec.PPL_HI).alias("f_perplexity"),
-        (
-            ~c("warc_ts").cast("timestamp").between(
-                F.lit(spec.TS_LO_ISO.replace("T", " ")).cast("timestamp"),
-                F.lit(spec.TS_HI_ISO.replace("T", " ")).cast("timestamp"),
-            )
-        ).alias("f_warc_ts_bounds"),
-        c("is_duplicate").alias("f_exact_duplicate"),
+    return df.selectExpr(
+        "*", *(f"{_FLAG_SQL[code]} AS f_{code}" for code in spec.CHECKS)
     )
 
 
 def failure_log(flagged: DataFrame) -> DataFrame:
     """Explode failing flags to the long (url, check_code) failure log."""
-    structs = [
-        F.when(
-            F.col(f"f_{code}"),
-            F.struct(F.lit(code).alias("check_code")),
-        )
+    structs = ", ".join(
+        f"CASE WHEN f_{code} THEN struct('{code}' AS check_code) END"
         for code in spec.CHECKS
-    ]
-    return flagged.select(
-        "url",
-        F.col("p_date"),
-        F.explode(F.filter(F.array(*structs), lambda x: x.isNotNull())).alias("f"),
-    ).select("url", "p_date", F.col("f.check_code").alias("check_code"))
+    )
+    return flagged.selectExpr(
+        "url", "p_date",
+        f"explode(filter(array({structs}), x -> x IS NOT NULL)) AS f",
+    ).selectExpr("url", "p_date", "f.check_code AS check_code")
 
 
 def decide(
@@ -192,19 +202,14 @@ def decide(
     (spec.build_scrub_chain); default is the spec chain. `extra_cols`
     carries named upstream columns (e.g. model outputs) through to the
     decision projection — still one codegen stage, no re-join."""
-    fail_codes = F.array(
-        *[
-            F.when(F.col(f"f_{code}"), F.lit(code))
-            for code in checks
-        ]
-    )
-    min_fail = F.array_min(F.filter(fail_codes, lambda x: x.isNotNull()))
+    codes = ", ".join(f"CASE WHEN f_{code} THEN '{code}' END" for code in checks)
+    min_fail = f"array_min(filter(array({codes}), x -> x IS NOT NULL))"
     return flagged.select(
         "url",
         "p_date",
         *extra_cols,
-        min_fail.isNull().alias("keep"),
-        min_fail.alias("first_fail_code"),
+        F.expr(f"{min_fail} IS NULL AS keep"),
+        F.expr(f"{min_fail} AS first_fail_code"),
         scrub_text("text_x", chain=scrub_chain).alias("scrubbed_text"),
     )
 
@@ -212,33 +217,49 @@ def decide(
 def metrics_table(flagged: DataFrame) -> DataFrame:
     """Per-(partition, check) n_checked/n_failed — one aggregation emitting
     all checks from the same pass (sum of flag ints, map-side combined)."""
-    aggs = []
-    for code in spec.CHECKS:
-        aggs.append(F.sum(F.col(f"f_{code}").cast("long")).alias(f"nf_{code}"))
     per_part = flagged.groupBy("p_date").agg(
-        F.count(F.lit(1)).alias("n_checked"), *aggs
+        F.expr("count(1) AS n_checked"),
+        *(
+            F.expr(f"sum(CAST(f_{code} AS BIGINT)) AS nf_{code}")
+            for code in spec.CHECKS
+        ),
     )
-    stacked = per_part.select(
-        "p_date",
+    structs = ", ".join(
+        f"struct('{code}' AS check_code, nf_{code} AS n_failed)"
+        for code in spec.CHECKS
+    )
+    return per_part.selectExpr(
+        "p_date", "n_checked", f"explode(array({structs})) AS m"
+    ).selectExpr(
+        "p_date AS partition_id",
+        "m.check_code AS check_code",
         "n_checked",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(code).alias("check_code"),
-                        F.col(f"nf_{code}").alias("n_failed"),
-                    )
-                    for code in spec.CHECKS
-                ]
-            )
-        ).alias("m"),
+        "m.n_failed AS n_failed",
     )
-    return stacked.select(
-        F.col("p_date").alias("partition_id"),
-        F.col("m.check_code").alias("check_code"),
-        "n_checked",
-        F.col("m.n_failed").alias("n_failed"),
-    )
+
+
+_NO_DATE = "__no_date__"  # p_date of a page without a warc_ts
+
+# What run_pipeline observes on its decisions write: the run's counts,
+# stored as the commit's report, and its processed dates.
+_REPORT = (
+    "count(1) AS rows",
+    "count_if(keep) AS kept",
+    f"count_if(p_date = '{_NO_DATE}') AS null_date_rows",
+    "named_struct("
+    + ", ".join(f"'{code}', count_if(f_{code})" for code in spec.CHECKS)
+    + ") AS failures",
+    "array_sort(collect_set(p_date)) AS dates",
+)
+
+
+def _observed(obs: Observation) -> dict:
+    """The observation's metrics, or {} for a run with no rows: adaptive
+    execution replaces an empty shuffle stage, and the observing node in
+    it, with an empty relation, so no metrics row is ever reported."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 def run_pipeline(
@@ -279,7 +300,23 @@ def run_pipeline(
     (never read) and reclaimable by an Iceberg-style orphan-file vacuum.
     Every commit is also a VERSION: `read_sink(..., version=k)` time-
     travels, and `snapshots.rollback` undoes a bad run without rewriting
-    history. Returns {"partitions_processed": k, "rows": n}.
+    history.
+
+    A commit runs only the jobs that write its three sinks. The run's
+    counts are observed on the decisions write (a `pyspark.sql.Observation`)
+    instead of being queried by extra jobs. If that write saw no rows —
+    nothing new to process — the run commits nothing and makes no
+    version: the failures and metrics writes are skipped and the
+    decisions data directory it wrote stays uncommitted, invisible to
+    every reader, for `snapshots.vacuum` to reclaim. Otherwise the commit's
+    `extra` carries the processed dates and a `report` of the run:
+    {"rows", "kept", "null_date_rows", "failures": {check: n}}, so the
+    manifest at version k (`snapshots.history`, `store.latest_extra()`)
+    holds run k's report.
+
+    Returns {"partitions_processed": k, "rows": n, "timings": {...}}; the
+    `t_*` timings are consecutive and together cover the call (t_probe:
+    input read and resume anti-join; t_count: the report, no job).
     """
     if store is None:
         store = FileSnapshotStore(out_dir)
@@ -300,7 +337,7 @@ def run_pipeline(
     # Inferred, not readers.PAGES_SCHEMA: pyarrow pages carry warc_ts as timestamp_ntz.
     pages = spark.read.parquet(pages_path).withColumn(
         "p_date",
-        F.coalesce(F.to_date("warc_ts").cast("string"), F.lit("__no_date__")),
+        F.coalesce(F.to_date("warc_ts").cast("string"), F.lit(_NO_DATE)),
     )
 
     if resume:
@@ -311,12 +348,7 @@ def run_pipeline(
             )
             pages = pages.join(F.broadcast(done), "p_date", "left_anti")
 
-    # cheap emptiness probe (1 row) instead of an eager full distinct-count
-    # job — the partition count comes from the cached result at the end
-    probe_empty = not pages.take(1)
     _mark("t_probe")
-    if probe_empty:
-        return {"partitions_processed": 0, "rows": 0, "timings": t}
 
     if salt_partitions:
         if salt_strategy == "size":
@@ -367,9 +399,15 @@ def run_pipeline(
         else None
     )
     try:
-        decisions = decide(flagged, scrub_chain=scrub_chain)
-        log = failure_log(flagged)
-        mets = metrics_table(flagged)
+        # The run's counts ride on the decisions write: the flags travel
+        # into the projection only to feed the observation and are dropped
+        # before the exchange, so the sink rows are decide's own.
+        obs = Observation()
+        decisions = (
+            decide(flagged, scrub_chain=scrub_chain, extra_cols=_FLAGS)
+            .observe(obs, *(F.expr(e) for e in _REPORT))
+            .drop(*_FLAGS)
+        )
 
         # Cluster by (partition column, bounded salt) before the partitioned
         # write. Clustering by p_date ALONE caps the write stage at
@@ -390,34 +428,42 @@ def run_pipeline(
             "decisions", hint, partition_col="p_date",
         )
         _mark("t_decisions")
+        seen = _observed(obs)
+        if not seen.get("rows"):
+            # nothing new: the empty data directory stays uncommitted
+            # (invisible; snapshots.vacuum reclaims it)
+            return {"partitions_processed": 0, "rows": 0, "timings": t}
         rel_log = store.write_table_data(
-            log.repartition(F.col("p_date"), wsalt),
+            failure_log(flagged).repartition(F.col("p_date"), wsalt),
             "failures", hint, partition_col="p_date",
         )
         _mark("t_failures")
         rel_met = store.write_table_data(
-            mets.repartition(F.col("partition_id")),
+            metrics_table(flagged).repartition(F.col("partition_id")),
             "metrics", hint, partition_col="partition_id",
         )
         _mark("t_metrics")
-        n_rows = flagged.count()
+        report = {k: seen[k] for k in ("rows", "kept", "null_date_rows")}
+        report["failures"] = seen["failures"].asDict()
         _mark("t_count")
-        # Collect the processed-partition ids BEFORE committing: flagged's
-        # lineage contains the resume anti-join against the prior manifest,
-        # so any recomputation after the commit would see its own output and
-        # report zero partitions (observed with a cold cache).
-        done = [r[0] for r in flagged.select("p_date").distinct().collect()]
-        # ONE atomic publish for all three sinks + the resume record
+        # ONE atomic publish for all three sinks + the resume record. The
+        # dates were observed during the decisions write, BEFORE this
+        # commit: flagged's lineage holds the resume anti-join against the
+        # prior manifest, so a recomputation after the commit would see
+        # its own output.
         store.commit_transaction(
             {"decisions": [rel_dec], "failures": [rel_log], "metrics": [rel_met]},
-            extra={"dates": done},
+            extra={"dates": seen["dates"], "report": report},
             keep_prior=True,
         )
         _mark("t_manifest")
-        n_parts = len(done)
     finally:
         flagged.unpersist()
-    return {"partitions_processed": n_parts, "rows": n_rows, "timings": t}
+    return {
+        "partitions_processed": len(seen["dates"]),
+        "rows": seen["rows"],
+        "timings": t,
+    }
 
 
 def read_sink(

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inspectehr_spark.functions.sqltext import sql_str_list
 from inspectehr_spark.functions.textfns import ALL_STOPWORDS, STOPWORDS
 from inspectehr_spark.tables import table as _t
 from inspectehr_spark.operators import windows as W
@@ -26,11 +27,6 @@ from inspectehr_spark.operators import missingness as M
 # --------------------------------------------------------------------------
 # helpers
 # --------------------------------------------------------------------------
-
-def _sql_stoplist(words: tuple[str, ...]) -> str:
-    inner = ", ".join(f"'{w}'" for w in words)
-    return f"[{inner}]"
-
 
 # Gopher-ish doc rules used by several queries (kept in sync with the SQL
 # constants below).
@@ -239,7 +235,7 @@ SELECT doc_id,
        ROUND(CAST(len(replace(text, ' ', '')) AS DOUBLE) / len(string_split(text, ' ')), 6) AS mean_word_len,
        ROUND(CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / len(text), 6) AS symbol_ratio,
        ROUND(CAST(len(list_filter(string_split(text, ' '),
-             t -> list_contains({_sql_stoplist(ALL_STOPWORDS)}, lower(t)))) AS DOUBLE)
+             t -> list_contains([{sql_str_list(ALL_STOPWORDS)}], lower(t)))) AS DOUBLE)
              / len(string_split(text, ' ')), 6) AS stopword_ratio
 FROM documents
 """
@@ -272,7 +268,7 @@ def q_langid_heuristic(spark, sf_dir):
 def _sql_lang_hits(lang: str) -> str:
     return (
         f"len(list_filter(string_split(text, ' '), "
-        f"t -> list_contains({_sql_stoplist(STOPWORDS[lang])}, lower(t))))"
+        f"t -> list_contains([{sql_str_list(STOPWORDS[lang])}], lower(t))))"
     )
 
 

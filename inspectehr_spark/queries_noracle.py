@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from inspectehr_spark.functions.sqltext import sql_str_list
 from inspectehr_spark.tables import table as _t
 
 
@@ -137,9 +138,9 @@ def _pipeline_decisions_sql() -> str:
     from inspectehr_spark.functions.textfns import ALL_STOPWORDS
     from inspectehr_spark.pipeline import spec
 
-    sw = ", ".join(f"'{w}'" for w in ALL_STOPWORDS)
+    sw = sql_str_list(ALL_STOPWORDS)
     checks = [c for c in spec.CHECKS if c not in ("langid_agree", "perplexity")]
-    langs = ", ".join(f"'{l}'" for l in spec.ALLOWED_LANGS)
+    langs = sql_str_list(spec.ALLOWED_LANGS)
     flag_expr = {
         "doc_length":
             f"NOT (n_chars::DOUBLE BETWEEN {spec.LEN_LO} AND {spec.LEN_HI})",
@@ -271,8 +272,8 @@ def _pipeline_decisions_native_sql() -> str:
     from inspectehr_spark.functions.textfns import ALL_STOPWORDS
     from inspectehr_spark.pipeline import spec
 
-    sw = ", ".join(f"'{w}'" for w in ALL_STOPWORDS)
-    langs = ", ".join(f"'{l}'" for l in spec.ALLOWED_LANGS)
+    sw = sql_str_list(ALL_STOPWORDS)
+    langs = sql_str_list(spec.ALLOWED_LANGS)
     _, profiles = spec.build_profiles()
     # The langid replay below scores only langs PRESENT in the weights join
     # (absent langs are omitted), while Spark scores them as 0 — the two

@@ -164,7 +164,8 @@ def latest_version(root: str) -> int | None:
 def history(root: str) -> list[dict]:
     """Commit log, oldest first: version, operation, timestamp, n_dirs
     (for transaction manifests n_dirs counts across all tables and a
-    `tables` dir-count map is included)."""
+    `tables` dir-count map is included), and the commit's `extra`
+    payload when it has one."""
     out = []
     for v in _versions(root):
         m = _read_manifest(root, v)
@@ -177,6 +178,8 @@ def history(root: str) -> list[dict]:
         }
         if tbls:
             entry["tables"] = {k: len(d) for k, d in tbls.items()}
+        if m.get("extra"):
+            entry["extra"] = m["extra"]
         out.append(entry)
     return out
 

@@ -167,7 +167,11 @@ class TableCatalogStore:
         except AnalysisException as e:
             if "v1 table" not in str(e):
                 raise
-            df.write.mode("append").format(self.fmt).saveAsTable(ident)
+            w = df.write.mode("append").format(self.fmt)
+            if partition_col:
+                # saveAsTable checks the partitioning against the table's
+                w = w.partitionBy(partition_col)
+            w.saveAsTable(ident)
 
     def _commits(self) -> list[dict]:
         """Commit rows, oldest→newest in the deterministic resolution

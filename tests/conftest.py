@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import threading
 import uuid
 
 import pytest
@@ -37,5 +38,34 @@ def count_jobs(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def count_py4j(spark):
+    """`count_py4j(fn)` runs `fn()` and returns `(result, n)`: n is the
+    number of py4j commands `fn` sent to the JVM from this thread. Object
+    releases, which py4j's finalizer thread sends whenever Python garbage
+    is collected, are not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    me = threading.get_ident()
+
+    def count(fn):
+        n = 0
+        send = client.send_command
+
+        def counting(command, *args, **kwargs):
+            nonlocal n
+            if threading.get_ident() == me and not command.startswith("m\n"):
+                n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            result = fn()
+        finally:
+            client.send_command = send
+        return result, n
 
     return count

@@ -655,6 +655,42 @@ def test_connected_components_small_path_matches_iterative(spark):
     assert small == iterative
 
 
+def test_connected_components_mixed_id_types_take_iterative_path(spark):
+    """src and dst of different types: the single-task union-find would
+    type both outputs from src and compare mixed values, so the graph
+    takes the iterative path, which coerces both ends to one type."""
+    from inspectehr_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (10, 11)], "src int, dst long"
+    )
+    stats: dict = {}
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(edges, stats=stats).collect()
+    }
+    assert stats["rounds"] > 0
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_connected_components_null_id_takes_iterative_path(spark):
+    """A null id cannot enter the union-find (it is not comparable), so a
+    small graph holding one takes the iterative path: the null becomes a
+    (null, null) row and links nothing; the other labels are exact."""
+    from inspectehr_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (4, None), (10, 11)], "src long, dst long"
+    )
+    stats: dict = {}
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(edges, stats=stats).collect()
+    }
+    assert stats["rounds"] > 0
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 10: 10, 11: 10, None: None}
+
+
 def test_psi_identity_and_shift(spark):
     """PSI of the reference group against itself is exactly 0; a shifted
     distribution scores positive."""

@@ -291,6 +291,126 @@ def test_null_warc_ts_resumes_cleanly(spark, tmp_path_factory):
     }
 
 
+def test_commit_report_matches_sinks_and_reference(spark, pipeline_out):
+    """The report observed on the decisions write, stored in the commit's
+    extra, equals the metrics sink's totals and the serial labeler."""
+    from inspectehr_spark.pipeline import spec
+    from inspectehr_spark.sources import snapshots as snap
+
+    out, stats, _planted, labels = pipeline_out
+    report = snap.history(out)[-1]["extra"]["report"]
+    rows, _ = corpus.generate_pages(n=N_DOCS, seed=SEED)
+    mets = read_sink(spark, out, "metrics").collect()
+    assert report["rows"] == stats["rows"] == len(labels)
+    assert report["rows"] == sum(
+        r["n_checked"] for r in mets if r["check_code"] == spec.CHECKS[0]
+    )
+    assert report["kept"] == sum(ref["keep"] for ref in labels.values())
+    assert report["null_date_rows"] == sum(r[1] is None for r in rows)
+    assert report["failures"] == {
+        code: sum(r["n_failed"] for r in mets if r["check_code"] == code)
+        for code in spec.CHECKS
+    }
+    assert report["failures"] == {
+        code: sum(ref["checks"][code] for ref in labels.values())
+        for code in spec.CHECKS
+    }
+
+
+# Jobs of one resumed commit that has rows: the pages schema inference,
+# the resume-date broadcast, and the exchanges and writes of the three
+# sinks. Inspecting the run with take/count/collect cost 17.
+JOBS_PER_RESUMED_COMMIT = 10
+
+
+def _refuse_driver_actions(monkeypatch, spark) -> None:
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("run_pipeline ran a driver action on a DataFrame")
+
+    cls = type(spark.range(1))
+    for name in ("take", "head", "first", "count", "collect", "toLocalIterator"):
+        monkeypatch.setattr(cls, name, refuse)
+
+
+def test_resumed_commit_runs_only_its_write_jobs(
+    spark, tmp_path_factory, count_jobs, monkeypatch
+):
+    """A resumed commit with rows runs only the jobs that write its sinks,
+    none of them a take/count/collect; a resume with nothing new makes no
+    version, leaves every sink as it was, and its uncommitted data
+    directory is the one thing vacuum reclaims. The manifest at version k
+    holds run k's report."""
+    from pyspark.sql import functions as F
+
+    from inspectehr_spark.sources import snapshots as snap
+
+    base = tmp_path_factory.mktemp("jobs")
+    src = str(base / "src.parquet")
+    corpus.write_pages_parquet(src, n=240, seed=17)
+    pages = spark.read.parquet(src)
+    day = F.to_date("warc_ts").cast("string")
+    dates = sorted(r[0] for r in pages.select(day).distinct().collect())
+    first = pages.filter(day.isin(dates[: len(dates) // 2]))
+    rest = pages.filter(~day.isin(dates[: len(dates) // 2]))
+    n_first, n_rest = first.count(), rest.count()
+    batches, out = str(base / "pages"), str(base / "out")
+    first.write.parquet(batches)
+    run_pipeline(spark, batches, out)
+    rest.write.mode("append").parquet(batches)
+
+    stats: dict = {}
+    with monkeypatch.context() as m:
+        _refuse_driver_actions(m, spark)
+        jobs = count_jobs(lambda: stats.update(run_pipeline(spark, batches, out)))
+    assert stats["rows"] == n_rest
+    assert jobs <= JOBS_PER_RESUMED_COMMIT, jobs
+
+    before = {k: sorted(map(tuple, read_sink(spark, out, k).collect()))
+              for k in ("decisions", "failures", "metrics")}
+    with monkeypatch.context() as m:
+        _refuse_driver_actions(m, spark)
+        empty = run_pipeline(spark, batches, out)
+    assert (empty["partitions_processed"], empty["rows"]) == (0, 0)
+    assert snap.latest_version(out) == 2
+    assert before == {k: sorted(map(tuple, read_sink(spark, out, k).collect()))
+                      for k in ("decisions", "failures", "metrics")}
+    assert [h["extra"]["report"]["rows"] for h in snap.history(out)] == [
+        n_first, n_rest,
+    ]
+    swept = snap.vacuum(out, grace_sec=0)
+    assert len(swept) == 1 and swept[0].startswith("decisions"), swept
+
+
+# py4j commands that build one commit's plan (enrich, flags, decide,
+# failure log, metrics), measured 560, plus 10% headroom. Building the
+# per-check lists with the Column API cost 3879.
+PLAN_BUILD_PY4J = 616
+
+
+def test_commit_plan_builds_in_few_py4j_calls(spark, fixture_corpus, count_py4j):
+    from pyspark.sql import functions as F
+
+    from inspectehr_spark.pipeline.run import (
+        decide, enrich, failure_flags, failure_log, flag_exact_duplicates,
+        metrics_table,
+    )
+
+    path, _planted, _labels = fixture_corpus
+    pages = spark.read.parquet(path).withColumn(
+        "p_date", F.to_date("warc_ts").cast("string")
+    ).drop("text")
+
+    def build():
+        flagged = failure_flags(flag_exact_duplicates(enrich(pages))).drop(
+            "warc_ts", "lang"
+        )
+        return decide(flagged), failure_log(flagged), metrics_table(flagged)
+
+    build()  # first use resolves JVM classes once per session
+    _, n = count_py4j(build)
+    assert n <= PLAN_BUILD_PY4J, n
+
+
 def test_ci_pattern_robust_terms():
     """_ci handles real-moderation-list shapes: mixed case normalizes,
     metacharacters and case-unstable letters escape literally."""
