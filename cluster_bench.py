@@ -11,10 +11,6 @@ Two measured modes per level:
 - `engine`  — the JVM-side stage chain (scan → native text features →
   hash-keyed dup window → noop sink): isolates the engine's plan scaling.
 - `pipeline` — the full quality-filter job (Arrow UDF stages + sinks).
-- `pipeline_native` (--native) — the SAME full job with the model stage
-  compiled to Catalyst (pipeline/models_native.py): bit-identical
-  decisions, zero Python in the plan. Quantifies exactly how much of the
-  pipeline's scaling loss is the pyspark worker socket.
 
 Rationale for reporting both: on this single-kernel sandbox the pyspark
 WORKER protocol is kernel-bound (measured: python workers spend ~76% of
@@ -87,8 +83,7 @@ from inspectehr_spark.pipeline.run import run_pipeline
 
 cores_max, pages_path, pyzip, out = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4]
 salt = int(sys.argv[5])
-model_stage = sys.argv[6] if len(sys.argv) > 6 else "arrow"
-spark = get_spark(app_name=f"pipe-{{model_stage}}-{{cores_max}}", master={master!r},
+spark = get_spark(app_name=f"pipe-{{cores_max}}", master={master!r},
                   shuffle_partitions=salt,
                   extra_conf={{"spark.executor.cores": "2",
                               "spark.executor.memory": "4g",
@@ -99,9 +94,9 @@ if os.path.exists(out):
     shutil.rmtree(out)
 t0 = time.perf_counter()
 stats = run_pipeline(spark, pages_path, out, resume=False,
-                     salt_partitions=salt, model_stage=model_stage)
+                     salt_partitions=salt)
 wall = time.perf_counter() - t0
-print(json.dumps({{"mode": "pipeline" if model_stage == "arrow" else "pipeline_native",
+print(json.dumps({{"mode": "pipeline",
                    "cores": int(cores_max),
                    "wall_sec": round(wall, 2), "rows": stats["rows"],
                    "docs_per_sec": round(stats["rows"] / wall, 1),
@@ -205,14 +200,8 @@ def main() -> None:
     # the 2c arm moved only +8%. Decomposition must be sized for the
     # LARGEST arm — the rule a 100 TB job follows anyway.
     ap.add_argument("--salt-partitions", type=int, default=None)
-    # Adds a third arm per rep: the FULL pipeline with the model stage
-    # compiled to Catalyst (pipeline/models_native.py) — bit-identical
-    # decisions, zero Python in the plan. Measures how much N→4N scaling
-    # headroom removing the pyspark worker socket buys on this
-    # shared-kernel sandbox (where that socket is the measured limiter).
-    ap.add_argument("--native", action="store_true")
-    # Explicit mode list (overrides --native). Lets a re-run harvest many
-    # reps of the SHORT arms only (engine / pipeline_native) — on a host
+    # Explicit mode list. Lets a re-run harvest many reps of the SHORT
+    # arm only (engine) — on a host
     # with bursty steal, short arms need many samples before one lands in
     # a clean window, and skipping the 6-11-minute arrow-pipeline arms
     # makes a 6-rep run affordable.
@@ -221,10 +210,11 @@ def main() -> None:
     levels = [int(x) for x in args.levels.split(",")]
     if args.modes:
         modes = args.modes.split(",")
+        unknown = sorted(set(modes) - {"engine", "pipeline"})
+        if unknown:
+            ap.error(f"unknown modes: {unknown}")
     else:
-        modes = ["engine", "pipeline"] + (
-            ["pipeline_native"] if args.native else []
-        )
+        modes = ["engine", "pipeline"]
     repo = os.path.dirname(os.path.abspath(__file__))
     workdir = tempfile.mkdtemp(prefix="cluster_bench_")
 
@@ -283,11 +273,9 @@ def main() -> None:
                               f"{r['wall_sec']}s (cal {cal}/s, during "
                               f"{r.get('cal_during')}/s)", file=sys.stderr)
                     for pmode in [m for m in modes if m != "engine"]:
-                        stage = "native" if pmode == "pipeline_native" else "arrow"
                         out = os.path.join(workdir, f"out_{pmode}_{cores}_{rep}")
                         r = _run(pipe_runner,
-                                 [str(cores), pages, pyzip, out, str(salt),
-                                  stage])
+                                 [str(cores), pages, pyzip, out, str(salt)])
                         results[cores][pmode].append(r["wall_sec"])
                         results[cores].setdefault(f"cal_{pmode}", []).append(
                             r.get("cal_during"))

@@ -1,9 +1,12 @@
 """Row-level predicate checks (the "rule battery").
 
 Reference semantics (R/evaluate_ranges.R, R/evaluate_metadata.R) recast as
-native column expressions — no UDFs anywhere in this module, so every check
+native SQL predicates — no UDFs anywhere in this module, so every check
 stays inside whole-stage codegen and its predicate is eligible for
-parquet/Iceberg pushdown when applied directly after a scan.
+parquet/Iceberg pushdown when applied directly after a scan. Each Rule
+kind is rendered once, as SQL text, by `violation_sql`; the pipeline's
+failure flags, the registry's document rules and `run_battery` all read
+that text.
 
 Design note (scale): the reference runs 255 sequential single-code scans
 (R/perform_evaluation.R:294-467). Here every check is a column predicate on
@@ -19,53 +22,18 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inspectehr_spark.functions.sqltext import sql_str
 from inspectehr_spark.rules import Rule
 from inspectehr_spark.schemas import make_failure_log
 
 
-def range_violation(col: Column, rule: Rule) -> Column:
-    """TRUE iff the value is present and OUTSIDE the rule interval.
-
-    NULL values yield no verdict (reference NA passthrough,
-    R/evaluate_ranges.R:61-66): NULL-ness is the metadata check's job.
-    Reference: evaluate_range numeric impl R/evaluate_ranges.R:47-93.
-    """
-    lo_ok = (col >= rule.lo) if rule.lo_incl else (col > rule.lo)
-    hi_ok = (col <= rule.hi) if rule.hi_incl else (col < rule.hi)
-    if math.isinf(rule.lo):
-        lo_ok = F.lit(True)
-    if math.isinf(rule.hi):
-        hi_ok = F.lit(True)
-    return col.isNotNull() & ~(lo_ok & hi_ok)
-
-
-def set_violation(col: Column, rule: Rule) -> Column:
-    """TRUE iff value not in the allowed set; NULL → no verdict.
-    Reference: evaluate_range string-set, R/evaluate_ranges.R:105-187."""
-    return col.isNotNull() & ~col.isin(*rule.possible_values)
-
-
-def pattern_violation(col: Column, rule: Rule) -> Column:
-    """TRUE iff value does not match the conformance regex.
-    Reference: evaluate_post_code, R/evaluate_ranges.R:200-222."""
-    return col.isNotNull() & ~col.rlike(rule.pattern)
-
-
-# Pinned default bounds for temporal rules that give only one side.
+# Pinned default bounds for timestamp rules that give only one side.
 # NEVER current_timestamp(): a wall-clock bound makes the same battery over
 # the same data yield different failure logs across runs, breaking
 # replay/resume idempotence and oracle parity (ADVICE r2 #2). A rule that
 # really wants "no future timestamps" must pin its own ts_hi.
 TS_DEFAULT_LO = "1900-01-01 00:00:00"
 TS_DEFAULT_HI = "2100-01-01 00:00:00"
-
-
-def temporal_violation(col: Column, lo: str = TS_DEFAULT_LO, hi: Column | None = None) -> Column:
-    """TRUE iff timestamp outside [lo, hi] (hi defaults to the pinned
-    TS_DEFAULT_HI spec constant — deterministic, never wall-clock).
-    Reference: evaluate_range.date/datetime_1d, R/evaluate_ranges.R:282-367."""
-    hi = hi if hi is not None else F.lit(TS_DEFAULT_HI).cast("timestamp")
-    return col.isNotNull() & ~col.between(F.lit(lo).cast("timestamp"), hi)
 
 
 def metadata_violation(meta_cols: list[str]) -> Column:
@@ -77,55 +45,80 @@ def metadata_violation(meta_cols: list[str]) -> Column:
     return cond
 
 
-def cross_column_violation(col: Column, rule: Rule) -> Column:
-    """TRUE iff the two columns disagree; either side NULL → no verdict.
-    (The langid-vs-declared-lang check; reference analog is the
-    co-existence/equality branch of evaluate_comparison,
-    R/evaluate_comparison.R:86-99, applied within one row.)"""
-    return col != F.col(rule.not_equals_column)
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
-def flag_violation(col: Column) -> Column:
-    """The column IS the verdict (precomputed boolean, e.g. is_duplicate)."""
-    return col.isNotNull() & col
+def _bound(x: float) -> str:
+    """A numeric bound as SQL text. An integral bound renders as an integer
+    literal: against a BIGINT column `n < 100 OR n > 500` pushes into the
+    parquet scan, where a DOUBLE bound (`100.0D`, or a Python float through
+    the Column API) casts the column and pushes only IsNotNull. Any other
+    bound renders as its shortest repr, a DECIMAL literal that widens to
+    the same DOUBLE against a double column."""
+    x = float(x)
+    return str(int(x)) if x.is_integer() else repr(x)
 
 
-def ts_bounds_violation(col: Column, rule: Rule) -> Column:
-    """TRUE iff timestamp outside [ts_lo, ts_hi]; NULL → no verdict. An
-    unset side falls back to the pinned TS_DEFAULT_LO/HI constants — never
-    current_timestamp(), which would make verdicts wall-clock dependent
-    (same data, different failure log across runs; ADVICE r2 #2).
-    Reference: evaluate_range.date/datetime_1d, R/evaluate_ranges.R:282-367."""
-    c = col.cast("timestamp")
-    lo = F.lit(rule.ts_lo or TS_DEFAULT_LO).cast("timestamp")
-    hi = F.lit(rule.ts_hi or TS_DEFAULT_HI).cast("timestamp")
-    return c.isNotNull() & ~c.between(lo, hi)
+def violation_sql(rule: Rule) -> str:
+    """A Rule's violation predicate as Spark SQL text — the one place a
+    check's semantics live. Dispatch by rule kind is the Python analog of
+    the reference's S3 method dispatch (R/evaluate_events.R:39-87):
 
+    - possible_values: value not in the set (evaluate_range string-set,
+      R/evaluate_ranges.R:105-187);
+    - pattern: value does not match the regex (evaluate_post_code,
+      R/evaluate_ranges.R:200-222);
+    - not_equals_column: the two columns disagree (the co-existence branch
+      of evaluate_comparison, R/evaluate_comparison.R:86-99, within a row);
+    - flag: the boolean column is the verdict (e.g. is_duplicate);
+    - ts_lo/ts_hi: timestamp outside [ts_lo, ts_hi], an unset side pinned
+      to TS_DEFAULT_LO/HI (evaluate_range.date/datetime_1d,
+      R/evaluate_ranges.R:282-367);
+    - lo/hi: value outside the interval (evaluate_range numeric,
+      R/evaluate_ranges.R:47-93).
 
-def violation_for(rule: Rule) -> Column:
-    """Dispatch a Rule to its predicate — the Python-dict analog of the
-    reference's S3 method dispatch (R/evaluate_events.R:39-87).
-
-    Raises on rules this module cannot express rather than silently
-    compiling a never-true predicate (a rule with no interval, set, pattern,
-    cross-column or flag spec would otherwise degrade to ±inf bounds)."""
-    col = F.col(rule.column)
+    One NULL rule for every kind: a NULL input gives no verdict (FALSE,
+    never NULL) — the reference's NA passthrough, R/evaluate_ranges.R:61-66;
+    NULL-ness is the metadata check's job. Raises on a rule with no
+    interval, set, pattern, cross-column or flag spec rather than compiling
+    a never-true predicate."""
+    c = _ident(rule.column)
     if rule.possible_values:
-        return set_violation(col, rule)
+        vals = ", ".join(sql_str(str(v)) for v in rule.possible_values)
+        return f"({c} IS NOT NULL AND NOT ({c} IN ({vals})))"
     if rule.pattern:
-        return pattern_violation(col, rule)
+        return f"({c} IS NOT NULL AND NOT ({c} RLIKE {sql_str(rule.pattern)}))"
     if rule.not_equals_column:
-        return cross_column_violation(col, rule)
+        o = _ident(rule.not_equals_column)
+        return f"({c} IS NOT NULL AND {o} IS NOT NULL AND {c} != {o})"
     if rule.flag:
-        return flag_violation(col)
+        return f"({c} IS NOT NULL AND {c})"
     if rule.ts_lo or rule.ts_hi:
-        return ts_bounds_violation(col, rule)
-    if math.isinf(rule.lo) and math.isinf(rule.hi):
+        t = f"CAST({c} AS TIMESTAMP)"
+        lo = sql_str(rule.ts_lo or TS_DEFAULT_LO)
+        hi = sql_str(rule.ts_hi or TS_DEFAULT_HI)
+        return (
+            f"({t} IS NOT NULL AND NOT ({t} >= CAST({lo} AS TIMESTAMP)"
+            f" AND {t} <= CAST({hi} AS TIMESTAMP)))"
+        )
+    inside = []
+    if not math.isinf(rule.lo):
+        inside.append(f"{c} {'>=' if rule.lo_incl else '>'} {_bound(rule.lo)}")
+    if not math.isinf(rule.hi):
+        inside.append(f"{c} {'<=' if rule.hi_incl else '<'} {_bound(rule.hi)}")
+    if not inside:
         raise ValueError(
             f"rule {rule.check_code!r} has no expressible predicate "
             "(no bounds, set, pattern, cross-column or flag)"
         )
-    return range_violation(col, rule)
+    return f"({c} IS NOT NULL AND NOT ({' AND '.join(inside)}))"
+
+
+def violation_for(rule: Rule) -> Column:
+    """The Rule's violation predicate as a Column (one parse of
+    violation_sql's text — no py4j round trip per operator)."""
+    return F.expr(violation_sql(rule))
 
 
 def check_rule(df: DataFrame, rule: Rule, **log_kw) -> DataFrame:
@@ -157,14 +150,14 @@ def run_battery(
     source_col: str = "source",
     strict: bool = False,
 ) -> DataFrame:
-    """ONE-PASS battery: evaluate every rule as a boolean column, then
-    explode failing flags into the long failure log.
+    """ONE-PASS battery: every rule's violation_sql guards one struct of a
+    single array expression, and exploding its non-NULL entries yields the
+    long failure log.
 
     Equivalent to unioning `check_rule` over rules (the reference's
-    bind_rows loop) but reads the input exactly once: the wide projection
-    computes all flags inside a single whole-stage-codegen pipeline and an
-    `explode` of a compact struct array yields the long form. No shuffle,
-    no repeated scan.
+    bind_rows loop) but reads the input exactly once: the projection
+    computes all verdicts inside a single whole-stage-codegen pipeline,
+    built from one SQL text. No shuffle, no repeated scan.
 
     Rules whose columns are absent are SKIPPED, and the skip is surfaced:
     a warning names every excluded check code and its missing columns
@@ -188,36 +181,30 @@ def run_battery(
 
         warnings.warn(f"run_battery skipped rules: {detail}", stacklevel=2)
 
-    flag_structs = [
-        F.when(
-            violation_for(r),
-            F.struct(
-                F.lit(r.check_code).alias("check_code"),
-                F.col(r.column).cast("string").alias("value"),
-                F.lit(r.eval_code).alias("eval_code"),
-                F.lit(r.description).alias("description"),
-            ),
-        )
-        for r in present
-    ]
-    if not flag_structs:
+    if not present:
         raise ValueError("no applicable rules for this DataFrame")
-
-    def key(name: str, cast: str):
-        return (F.col(name).cast(cast) if name in cols else F.lit(None).cast(cast))
-
-    exploded = df.select(
-        key(source_col, "string").alias("source"),
-        key(url_col, "string").alias("url"),
-        key(doc_id_col, "long").alias("doc_id"),
-        F.explode(
-            F.filter(F.array(*flag_structs), lambda x: x.isNotNull())
-        ).alias("f"),
+    structs = ", ".join(
+        f"CASE WHEN {violation_sql(r)} THEN struct("
+        f"{sql_str(r.check_code)} AS check_code, "
+        f"CAST({_ident(r.column)} AS STRING) AS value, "
+        f"{sql_str(r.eval_code)} AS eval_code, "
+        f"{sql_str(r.description)} AS description) END"
+        for r in present
     )
-    return exploded.select(
+
+    def key(name: str, cast: str, alias: str) -> str:
+        src = _ident(name) if name in cols else "NULL"
+        return f"CAST({src} AS {cast}) AS {alias}"
+
+    return df.selectExpr(
+        key(source_col, "STRING", "source"),
+        key(url_col, "STRING", "url"),
+        key(doc_id_col, "BIGINT", "doc_id"),
+        f"explode(filter(array({structs}), x -> x IS NOT NULL)) AS f",
+    ).selectExpr(
         "source", "url", "doc_id",
-        F.col("f.check_code").alias("check_code"),
-        F.col("f.value").alias("value"),
-        F.col("f.eval_code").alias("eval_code"),
-        F.col("f.description").alias("description"),
+        "f.check_code AS check_code",
+        "f.value AS value",
+        "f.eval_code AS eval_code",
+        "f.description AS description",
     )

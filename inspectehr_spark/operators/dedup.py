@@ -349,23 +349,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def with_dup_ngram_fraction(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "dup_ngram_frac",
-    n: int = 3,
-) -> DataFrame:
-    """Add the within-document duplicated n-gram fraction (Gopher
-    repetition rule): 1 - distinct/total over word n-grams."""
-    staged = with_shingles(df, text_col=text_col, out_col="_sh", n=n)
-    total = F.size(F.col("_sh"))
-    frac = F.when(
-        total > 0,
-        F.round(1.0 - F.size(F.array_distinct(F.col("_sh"))) / total, 6),
-    ).otherwise(F.lit(0.0))
-    return staged.withColumn(out_col, frac).drop("_sh")
-
-
 def contamination_flags(
     corpus: DataFrame,
     benchmark: DataFrame,

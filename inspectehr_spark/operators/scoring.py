@@ -22,16 +22,6 @@ def keep(df: DataFrame, failure_log: DataFrame, key: str = "doc_id") -> DataFram
     return df.join(failure_log.select(key).distinct(), key, "left_anti")
 
 
-def drop_with_reason(df: DataFrame, failure_log: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Rows that failed, annotated with their first failing check (stable:
-    min by (check_code) so the outcome is order-independent under
-    parallelism — the reference relies on row order; we must not)."""
-    first_fail = failure_log.groupBy(key).agg(
-        F.min("check_code").alias("first_fail_code")
-    )
-    return df.join(first_fail, key, "inner")
-
-
 def decisions(df: DataFrame, failure_log: DataFrame, key: str = "doc_id") -> DataFrame:
     """Full keep/drop decision table: every input row, keep flag, first
     failing check code (NULL when kept). One left join, no double scan."""

@@ -4,7 +4,7 @@ model scorer, R/analyse_bg.R:15-34).
 
 `map_extract_score` is the one Python surface: a fused mapInArrow pass
 over raw Arrow batches. Its zero-Python twin is
-pipeline/models_native.enrich_native (run_pipeline's model_stage="native").
+pipeline/models_native.enrich_native, the full-battery oracle's model stage.
 Extraction uses pandas str ops; langid is a doc×bigram count matrix times
 an integer weight matrix (numpy, exact int64); perplexity
 dictionary-encodes tokens and loops only over the UNIQUE-token

@@ -19,13 +19,10 @@ paired at ~1.0 efficiency in its clean window (vectorized numpy over
 columnar buffers) while this variant plateaued at ~0.70 — the
 interpreted higher-order functions allocate a per-document bigram
 string array, so at high core counts the stage becomes allocation/GC-
-bound. The Arrow stage therefore stays run_pipeline's default
-(model_stage="arrow"); this module remains valuable as (a) the
-zero-Python option where Python workers are unavailable, and (b) the
-enabler of the FULL-battery value oracle: with langid/perplexity as
-deterministic SQL, DuckDB replays every one of the 11 checks
-(queries_noracle.pipeline_decisions_native). cluster_bench.py --native
-measures both claims.
+bound. The Arrow stage is therefore run_pipeline's model stage; this
+module is the enabler of the FULL-battery value oracle: with
+langid/perplexity as deterministic SQL, DuckDB replays every one of the
+11 checks (queries_noracle.pipeline_decisions_native).
 
 Expression-shape rules observed (the repo-wide HOF discipline,
 operators/dedup.py): arrays a lambda reads are MATERIALIZED columns
@@ -39,13 +36,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inspectehr_spark.functions.sqltext import sql_str
 from inspectehr_spark.pipeline import spec
 from inspectehr_spark.pipeline.run import heuristic_features
-
-
-def _sql_str(s: str) -> str:
-    """SQL string literal with backslash + quote escaping (Spark parser)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _weight_map(weights: dict[str, int]) -> Column:
@@ -53,7 +46,7 @@ def _weight_map(weights: dict[str, int]) -> Column:
     # costs 2-3 py4j round trips PER ENTRY at query-construction time —
     # measured ~3 s of pure driver-side construction for the two maps here
     entries = ", ".join(
-        f"{_sql_str(b)}, {int(w)}L" for b, w in sorted(weights.items())
+        f"{sql_str(b)}, {int(w)}L" for b, w in sorted(weights.items())
     )
     return F.expr(f"map({entries})")
 
@@ -71,7 +64,7 @@ def _lane_map(profiles: dict[str, dict[str, int]], vocab) -> Column:
     for b in sorted(vocab):
         lanes = [int(profiles[lang].get(b, 0)) for lang in spec.LANGS] + [1]
         arr = ", ".join(f"{w}L" for w in lanes)
-        parts.append(f"{_sql_str(b)}, array({arr})")
+        parts.append(f"{sql_str(b)}, array({arr})")
     return F.expr("map(" + ", ".join(parts) + ")")
 
 

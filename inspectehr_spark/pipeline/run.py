@@ -40,9 +40,11 @@ from inspectehr_spark.sources.store import FileSnapshotStore, SnapshotStore
 
 from inspectehr_spark.functions.sqltext import sql_str_list
 from inspectehr_spark.functions.textfns import ALL_STOPWORDS, word_ngrams
+from inspectehr_spark.operators.checks import violation_sql
 from inspectehr_spark.pipeline import spec
 from inspectehr_spark.pipeline.models import map_extract_score
 from inspectehr_spark.pipeline.scrub import scrub_text
+from inspectehr_spark.rules import WEB_RULES
 
 
 def enrich(pages: DataFrame) -> DataFrame:
@@ -62,10 +64,10 @@ def enrich(pages: DataFrame) -> DataFrame:
 
 # Plan builders below write their per-check and per-literal lists as SQL
 # text: one parse on the JVM side instead of a py4j round trip per Column
-# operator (enrich's stopword isin alone was 265 calls). Float thresholds
-# carry the `D` suffix — a bare decimal parses as DECIMAL, the Column
-# API's float literal is DOUBLE — so the analyzed plans are the
-# Column-built ones.
+# operator (enrich's stopword isin alone was 265 calls). The feature
+# block's float literals carry the `D` suffix — a bare decimal parses as
+# DECIMAL, the Column API's float literal is DOUBLE. The check predicates
+# come from operators/checks.violation_sql.
 _FEATURES = (
     "length(text_x) AS n_chars",
     "size(_toks) AS n_tokens",
@@ -139,39 +141,14 @@ def flag_exact_duplicates(
     )
 
 
-def _between(x: str, lo: str, hi: str) -> str:
-    # Column.between's own expansion, so the analyzed plan is unchanged
-    return f"({x} >= {lo} AND {x} <= {hi})"
-
-
-_FLAG_SQL = {
-    "doc_length": "NOT "
-    + _between("CAST(n_chars AS DOUBLE)", f"{spec.LEN_LO!r}D", f"{spec.LEN_HI!r}D"),
-    "word_count": "NOT "
-    + _between("CAST(n_tokens AS DOUBLE)", f"{spec.TOK_LO!r}D", f"{spec.TOK_HI!r}D"),
-    "mean_word_length": "(mean_word_len IS NOT NULL AND NOT "
-    + _between("mean_word_len", f"{spec.MWL_LO!r}D", f"{spec.MWL_HI!r}D") + ")",
-    "symbol_ratio": f"(symbol_ratio IS NOT NULL AND symbol_ratio > {spec.SYM_HI!r}D)",
-    "stopword_ratio":
-        f"(stopword_ratio IS NOT NULL AND stopword_ratio < {spec.SW_LO!r}D)",
-    "dup_ngram_frac": f"dup_ngram_frac > {spec.DUPNG_HI!r}D",
-    "lang_allowed": f"NOT (lang IN ({sql_str_list(spec.ALLOWED_LANGS)}))",
-    "langid_agree": "lang_pred != lang",
-    "perplexity": f"perplexity > {spec.PPL_HI!r}D",
-    "warc_ts_bounds": "NOT " + _between(
-        "CAST(warc_ts AS TIMESTAMP)",
-        f"CAST('{spec.TS_LO_ISO.replace('T', ' ')}' AS TIMESTAMP)",
-        f"CAST('{spec.TS_HI_ISO.replace('T', ' ')}' AS TIMESTAMP)",
-    ),
-    "exact_duplicate": "is_duplicate",
-}
 _FLAGS = tuple(f"f_{code}" for code in spec.CHECKS)
 
 
 def failure_flags(df: DataFrame) -> DataFrame:
-    """All spec checks as boolean columns (single codegen stage)."""
+    """Every rule of rules.WEB_RULES as a boolean column f_<check_code>
+    (one projection, single codegen stage). A NULL input fails no check."""
     return df.selectExpr(
-        "*", *(f"{_FLAG_SQL[code]} AS f_{code}" for code in spec.CHECKS)
+        "*", *(f"{violation_sql(r)} AS f_{r.check_code}" for r in WEB_RULES)
     )
 
 
@@ -270,19 +247,9 @@ def run_pipeline(
     salt_partitions: int | None = None,
     tox_terms_path: str | None = None,
     store: "SnapshotStore | None" = None,
-    model_stage: str = "arrow",
     salt_strategy: str = "hash",
 ) -> dict[str, int]:
     """Execute the pipeline; idempotent under resume.
-
-    `model_stage` selects the enrichment implementation: "arrow" (default)
-    is the fused mapInArrow stage — the shape a real fastText/KenLM
-    deployment has, since native C models live behind Python — while
-    "native" swaps in pipeline/models_native.enrich_native, the Catalyst
-    compilation of the same integer-exact models (bit-identical output,
-    tests/test_models_native.py; available whenever the model is
-    weight-table-expressible). Everything downstream — dup flagging,
-    battery, scrub, sinks, resume — is byte-identical between the two.
 
     `tox_terms_path` injects a moderation term list (one term per line,
     spec.load_tox_terms) into the scrub chain's toxicity stage; the PII
@@ -381,16 +348,8 @@ def run_pipeline(
     # before persisting — caching them would multiply the cache footprint
     # for bytes no sink reads.
     pages = pages.drop("text")
-    if model_stage == "native":
-        from inspectehr_spark.pipeline.models_native import enrich_native
-
-        _enrich = enrich_native
-    elif model_stage == "arrow":
-        _enrich = enrich
-    else:
-        raise ValueError(f"unknown model_stage: {model_stage!r}")
     # one wide pass: the dup window's exchange carries the rows once
-    flagged = failure_flags(flag_exact_duplicates(_enrich(pages))).drop(
+    flagged = failure_flags(flag_exact_duplicates(enrich(pages))).drop(
         "warc_ts", "lang"
     ).persist()
     scrub_chain = (

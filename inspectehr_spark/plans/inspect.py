@@ -22,10 +22,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries from every parquet scan node in the plan."""
     plan = formatted_plan(df)
@@ -84,9 +80,3 @@ def keyed_exchange_count(df: DataFrame) -> int:
         if m.group(1) in ("hashpartitioning", "rangepartitioning"):
             count += 1
     return count
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    ids = set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
-    return len(ids)

@@ -12,7 +12,6 @@ Registry shape: QUERIES[name] = (spark_fn, sql_or_None); spark_fn takes
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -20,6 +19,8 @@ from pyspark.sql import functions as F
 
 from inspectehr_spark.functions.sqltext import sql_str_list
 from inspectehr_spark.functions.textfns import ALL_STOPWORDS, STOPWORDS
+from inspectehr_spark.operators.checks import run_battery, violation_for
+from inspectehr_spark.rules import Rule
 from inspectehr_spark.tables import table as _t
 from inspectehr_spark.operators import windows as W
 from inspectehr_spark.operators import missingness as M
@@ -28,10 +29,17 @@ from inspectehr_spark.operators import missingness as M
 # helpers
 # --------------------------------------------------------------------------
 
-# Gopher-ish doc rules used by several queries (kept in sync with the SQL
-# constants below).
+# Gopher-ish doc rules used by several queries: DOC_RULES for the Spark
+# side, the same constants in the oracle SQL texts below.
 LEN_LO, LEN_HI = 100, 500
 ALLOWED = ("de", "en", "es", "fr")
+DOC_RULES = (
+    Rule("doc_length", "VE_VC_03", "document length (chars) outside allowed interval",
+         column="n_chars", lo=LEN_LO, hi=LEN_HI),
+    Rule("lang_allowed", "VE_VC_04", "language not in allowed set",
+         column="lang", possible_values=ALLOWED),
+)
+DOC_LENGTH, LANG_ALLOWED = DOC_RULES
 SESSION_GAP_MIN = 30.0
 TS_LO, TS_HI = "2024-01-05 00:00:00", "2024-01-25 00:00:00"
 
@@ -51,37 +59,10 @@ WITH failures AS (
 
 
 def _doc_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared two-rule failure log (length + lang), single scan."""
-    docs = _t(spark, sf_dir, "documents")
-    len_fail = F.when(
-        (F.col("n_chars") < LEN_LO) | (F.col("n_chars") > LEN_HI),
-        F.struct(
-            F.lit("doc_length").alias("check_code"),
-            F.col("n_chars").cast("string").alias("value"),
-            F.lit("VE_VC_03").alias("eval_code"),
-        ),
-    )
-    lang_fail = F.when(
-        ~F.col("lang").isin(*ALLOWED),
-        F.struct(
-            F.lit("lang_allowed").alias("check_code"),
-            F.col("lang").alias("value"),
-            F.lit("VE_VC_04").alias("eval_code"),
-        ),
-    )
-    return docs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.filter(F.array(len_fail, lang_fail), lambda x: x.isNotNull())
-        ).alias("f"),
-    ).select(
-        "doc_id",
-        "source",
-        F.col("f.check_code").alias("check_code"),
-        F.col("f.value").alias("value"),
-        F.col("f.eval_code").alias("eval_code"),
-    )
+    """The shared two-rule failure log (DOC_RULES), single scan."""
+    return run_battery(
+        _t(spark, sf_dir, "documents"), DOC_RULES, strict=True
+    ).select("doc_id", "source", "check_code", "value", "eval_code")
 
 
 # --------------------------------------------------------------------------
@@ -92,13 +73,11 @@ def q_doc_length_fail(spark, sf_dir):
     """Numeric range rule (reference evaluate_range numeric,
     R/evaluate_ranges.R:47-93). Pure filter — pushed to the parquet scan."""
     docs = _t(spark, sf_dir, "documents")
-    return docs.filter(
-        (F.col("n_chars") < LEN_LO) | (F.col("n_chars") > LEN_HI)
-    ).select(
+    return docs.filter(violation_for(DOC_LENGTH)).select(
         "doc_id",
         "source",
         F.col("n_chars").cast("string").alias("value"),
-        F.lit("VE_VC_03").alias("eval_code"),
+        F.lit(DOC_LENGTH.eval_code).alias("eval_code"),
     )
 
 
@@ -112,9 +91,9 @@ def q_lang_set_fail(spark, sf_dir):
     """Set-membership rule (reference string-set evaluate_range,
     R/evaluate_ranges.R:105-187)."""
     docs = _t(spark, sf_dir, "documents")
-    return docs.filter(~F.col("lang").isin(*ALLOWED)).select(
+    return docs.filter(violation_for(LANG_ALLOWED)).select(
         "doc_id", "source", F.col("lang").alias("value"),
-        F.lit("VE_VC_04").alias("eval_code"),
+        F.lit(LANG_ALLOWED.eval_code).alias("eval_code"),
     )
 
 
@@ -316,10 +295,12 @@ ORDER BY s.source, l.lang
 def q_temporal_bounds_fail(spark, sf_dir):
     """Timestamp-range rule (reference evaluate_range.datetime,
     R/evaluate_ranges.R:347-367) with fixed literal bounds."""
+    rule = Rule("temporal_bounds", "VE_VC_05", "event time outside window",
+                column="ts", ts_lo=TS_LO, ts_hi=TS_HI)
     ev = _t(spark, sf_dir, "events")
-    return ev.filter(
-        ~F.col("ts").between(F.lit(TS_LO).cast("timestamp"), F.lit(TS_HI).cast("timestamp"))
-    ).select("event_id", "ts", F.lit("VE_VC_05").alias("eval_code"))
+    return ev.filter(violation_for(rule)).select(
+        "event_id", "ts", F.lit(rule.eval_code).alias("eval_code")
+    )
 
 
 SQL_TEMPORAL_BOUNDS_FAIL = f"""

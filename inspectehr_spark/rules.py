@@ -3,10 +3,10 @@
 The reference drives its battery from a 255-row DQ-reference CSV with a
 `ranges` string column like "[0, 100]" / "(0, Inf)" parsed per call
 (`parse_range`, reference R/utils.R:377-433) plus a `possible_values`
-list-column (R/evaluate_ranges.R:105-187). We parse ranges ONCE on the
-driver into (lo, hi, lo_incl, hi_incl) and ship the whole rules table to
-executors as a broadcast DataFrame / plain dict — it is tiny, the fact
-table never shuffles for it.
+list-column (R/evaluate_ranges.R:105-187). Here a rule table is a list of
+`Rule` values on the driver, ranges parsed ONCE into (lo, hi, lo_incl,
+hi_incl); `operators.checks.violation_sql` compiles each rule into the
+plan as SQL text, so the table never reaches the executors as data.
 """
 
 from __future__ import annotations
@@ -14,12 +14,6 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass, field
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, StringType, StructField, StructType,
-)
 
 _RANGE_RE = re.compile(
     r"^\s*([\[\(])\s*(-?(?:\d+\.?\d*|Inf|inf))\s*,\s*(-?(?:\d+\.?\d*|Inf|inf))\s*([\]\)])\s*$"
@@ -43,7 +37,7 @@ class Rule:
     """One row of the rules table (qref analog, reference R/datasets.R:5-25).
 
     Exactly one violation kind per rule, dispatched by
-    `operators.checks.violation_for`:
+    `operators.checks.violation_sql`:
     - numeric interval (lo/hi) — evaluate_range numeric
     - possible_values set — evaluate_range string-set
     - pattern regex — evaluate_post_code-style conformance
@@ -66,66 +60,21 @@ class Rule:
     flag: bool = False           # boolean column: fail iff column is TRUE
     ts_lo: str = ""              # timestamp bounds rule ("YYYY-MM-DD HH:MM:SS")
     ts_hi: str = ""
-    periodicity_lo: float = -math.inf
-    periodicity_hi: float = math.inf
 
     def required_columns(self) -> tuple[str, ...]:
         if self.not_equals_column:
             return (self.column, self.not_equals_column)
         return (self.column,)
 
-    @classmethod
-    def from_range_string(cls, check_code, eval_code, description, ranges, **kw):
-        lo, hi, li, hi_i = parse_range(ranges)
-        return cls(check_code, eval_code, description,
-                   lo=lo, hi=hi, lo_incl=li, hi_incl=hi_i, **kw)
-
-
-RULES_SCHEMA = StructType([
-    StructField("check_code", StringType()),
-    StructField("eval_code", StringType()),
-    StructField("description", StringType()),
-    StructField("column", StringType()),
-    StructField("lo", DoubleType()),
-    StructField("hi", DoubleType()),
-    StructField("lo_incl", BooleanType()),
-    StructField("hi_incl", BooleanType()),
-    StructField("possible_values", ArrayType(StringType())),
-    StructField("pattern", StringType()),
-    StructField("not_equals_column", StringType()),
-    StructField("flag", BooleanType()),
-    StructField("ts_lo", StringType()),
-    StructField("ts_hi", StringType()),
-    StructField("periodicity_lo", DoubleType()),
-    StructField("periodicity_hi", DoubleType()),
-])
-
-
-def rules_df(spark: SparkSession, rules: list[Rule]):
-    """Materialize rules as a broadcast-hinted DataFrame (dimension side of
-    every rules join)."""
-    rows = [
-        (
-            r.check_code, r.eval_code, r.description, r.column,
-            float(r.lo), float(r.hi), r.lo_incl, r.hi_incl,
-            list(r.possible_values), r.pattern,
-            r.not_equals_column, r.flag, r.ts_lo, r.ts_hi,
-            float(r.periodicity_lo), float(r.periodicity_hi),
-        )
-        for r in rules
-    ]
-    return F.broadcast(spark.createDataFrame(rows, RULES_SCHEMA))
-
 
 # ---------------------------------------------------------------------------
 # Default web-text rule battery (Gopher/C4-style heuristics recast from the
 # reference's evaluate_range battery, R/evaluate_ranges.R).
 #
-# SINGLE SOURCE OF TRUTH: every threshold is imported from pipeline/spec.py —
-# the same constants the batch pipeline (pipeline/run.py failure_flags) and
-# the serial reference labeler implement. run_battery(WEB_RULES) over the
-# enriched frame is asserted identical to failure_flags in
-# tests/test_pipeline.py::test_battery_matches_failure_flags.
+# The batch pipeline runs exactly these rules: pipeline/run.py failure_flags
+# selects violation_sql(rule) AS f_<check_code> for each, in spec.CHECKS
+# order. Every threshold is imported from pipeline/spec.py, the constants
+# the serial reference labeler implements with its own code.
 # ---------------------------------------------------------------------------
 
 from inspectehr_spark.pipeline import spec as _spec

@@ -136,14 +136,3 @@ def make_failure_log(
         F.lit(eval_code).alias("eval_code"),
         F.lit(description).alias("description"),
     )
-
-
-def union_failure_logs(*logs: DataFrame) -> DataFrame:
-    """Union N failure logs (reference bind_rows accumulation,
-    R/evaluate_events.R:43-87) — schema-aligned by construction."""
-    out = None
-    for log in logs:
-        out = log if out is None else out.unionByName(log)
-    if out is None:
-        raise ValueError("no failure logs to union")
-    return out

@@ -296,7 +296,8 @@ def _dedup_commit_batch(
     A row is a duplicate when its 128-bit text hash pair (salt-first,
     the pipeline's exact-dup key) is already in the committed corpus —
     the batch ANTI-JOINS the snapshot 'hashes' table — or when an
-    earlier row of the SAME batch has the same pair (keep-first by id).
+    earlier row of the SAME batch has the same pair (keep-first by id:
+    pipeline.run.flag_exact_duplicates, the one exact-duplicate verdict).
     Survivors and their hash pairs commit in ONE transaction, so the
     dedup index and the data can never diverge (a crash between the two
     would otherwise permanently pass or drop future duplicates).
@@ -304,8 +305,7 @@ def _dedup_commit_batch(
     Scale: the per-batch anti-join is batch-sized vs corpus-history; at
     10^12 docs persist the hashes table bucketed by h1 so the join is
     storage-partitioned instead of reshuffling history per batch."""
-    from pyspark.sql import Window
-
+    from inspectehr_spark.pipeline.run import flag_exact_duplicates
     from inspectehr_spark.sources import snapshots as snap
 
     if _replayed(snap.latest_extra(root), ingest_id, batch_id):
@@ -320,16 +320,15 @@ def _dedup_commit_batch(
         hashed = hashed.join(known, ["_h1", "_h2"], "left_anti")
     except FileNotFoundError:
         pass                                  # first batch: empty history
-    w = Window.partitionBy("_h1", "_h2").orderBy(id_col)
     # PERSIST before fan-out: the survivors feed FOUR consumers (emptiness
     # probe, the 'stream' write, the 'hashes' write, the returned count).
     # Unpersisted, each would re-run the history anti-join — and the two
     # writes would be independent evaluations that could disagree on a
     # row_number tie, violating the index==data invariant.
     fresh = (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        flag_exact_duplicates(hashed, text_col, id_col)
+        .filter(~F.col("is_duplicate"))
+        .drop("is_duplicate")
         .persist()
     )
     try:

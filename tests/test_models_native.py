@@ -81,48 +81,13 @@ def test_native_model_edge_cases(spark):
 
 
 def test_enrich_native_zero_python_plan(spark):
-    """The native pipeline plan contains NO Python evaluation nodes —
-    the property the --native cluster-bench mode measures."""
+    """The native model stage's plan contains NO Python evaluation nodes —
+    the property the full-battery DuckDB oracle relies on."""
     from inspectehr_spark.pipeline.models_native import enrich_native
 
     pages = _pages(spark, n=50).select("url", "warc_ts", "html", "lang")
     plan = enrich_native(pages)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan, plan[:2000]
-
-
-def test_run_pipeline_native_identical_decisions(spark, tmp_path_factory):
-    """run_pipeline(model_stage="native") — the zero-Python plan the
-    --native cluster-bench arm measures — commits byte-identical
-    decisions to the arrow pipeline on the planted corpus."""
-    import os
-
-    from inspectehr_spark.pipeline import corpus
-    from inspectehr_spark.pipeline.run import read_sink, run_pipeline
-
-    d = tmp_path_factory.mktemp("native_pipe")
-    path = os.path.join(str(d), "pages.parquet")
-    corpus.write_pages_parquet(path, n=400, seed=11)
-
-    def decisions(out):
-        return {
-            r["url"]: (r["keep"], r["first_fail_code"], r["scrubbed_text"])
-            for r in read_sink(spark, out, "decisions").collect()
-        }
-
-    out_a = str(tmp_path_factory.mktemp("out_arrow"))
-    run_pipeline(spark, path, out_a, resume=False, salt_partitions=8)
-    out_n = str(tmp_path_factory.mktemp("out_native"))
-    run_pipeline(spark, path, out_n, resume=False, salt_partitions=8,
-                 model_stage="native")
-    a, n = decisions(out_a), decisions(out_n)
-    assert a.keys() == n.keys() and len(a) == 400
-    diff = {u: (a[u], n[u]) for u in a if a[u] != n[u]}
-    assert not diff, list(diff.items())[:3]
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        run_pipeline(spark, path, out_n, resume=False, model_stage="nope")
 
 
 def test_native_oracle_crc_replay_assumptions(spark, sf_dir):

@@ -193,10 +193,18 @@ def test_sink_time_travel_and_rollback(spark, fixture_corpus, tmp_path_factory):
     assert read_sink(spark, out, "decisions", version=2).count() == n2
 
 
+def test_web_rules_follow_check_order():
+    """failure_flags names its columns from WEB_RULES and decide reads them
+    by spec.CHECKS: the two lists must be the same, in the same order."""
+    from inspectehr_spark.pipeline import spec
+    from inspectehr_spark.rules import WEB_RULES
+
+    assert [r.check_code for r in WEB_RULES] == list(spec.CHECKS)
+
+
 def test_battery_matches_failure_flags(spark, fixture_corpus):
-    """WEB_RULES and the pipeline's hand-written failure_flags are two
-    implementations of the SAME spec constants — the failure sets must be
-    identical check-for-check (VERDICT r1: threshold drift + dead
+    """run_battery(WEB_RULES)'s long log and the pipeline's failure_flags →
+    failure_log agree check-for-check (VERDICT r1: threshold drift + dead
     langid_agree rule)."""
     from pyspark.sql import functions as F
 
@@ -266,12 +274,16 @@ def test_resume_is_idempotent_and_incremental(spark, fixture_corpus, tmp_path_fa
 def test_null_warc_ts_resumes_cleanly(spark, tmp_path_factory):
     """A NULL warc_ts must land in the sentinel partition, resume without
     crashing sorted() over the date set, and never re-append (the NULL
-    key would miss the anti-join every run)."""
+    key would miss the anti-join every run). A NULL input fails no check:
+    the metrics sink counts 0 for it, as the commit report does."""
     import datetime as dt
+
+    from inspectehr_spark.sources import snapshots as snap
 
     rows = [
         ("https://x/1", dt.datetime(2025, 3, 1), b"<html><p>one doc here</p></html>", "one doc here", "en"),
         ("https://x/2", None, b"<html><p>no timestamp doc</p></html>", "no timestamp doc", "en"),
+        ("https://x/3", dt.datetime(2025, 3, 1), b"<html><p>no lang doc</p></html>", "no lang doc", None),
     ]
     df = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -280,12 +292,18 @@ def test_null_warc_ts_resumes_cleanly(spark, tmp_path_factory):
     df.write.parquet(src)
     out = str(tmp_path_factory.mktemp("null_ts_out"))
     s1 = run_pipeline(spark, src, out, resume=True)
-    assert s1["rows"] == 2
+    assert s1["rows"] == 3
     assert s1["partitions_processed"] == 2        # real date + __no_date__
+    metrics = read_sink(spark, out, "metrics").collect()
+    assert metrics and all(isinstance(r["n_failed"], int) for r in metrics)
+    sums: dict[str, int] = {}
+    for r in metrics:
+        sums[r["check_code"]] = sums.get(r["check_code"], 0) + r["n_failed"]
+    assert sums == snap.latest_extra(out)["report"]["failures"]
     s2 = run_pipeline(spark, src, out, resume=True)
     assert s2["partitions_processed"] == 0        # nothing reprocessed
     dec = read_sink(spark, out, "decisions")
-    assert dec.count() == 2                       # and nothing duplicated
+    assert dec.count() == 3                       # and nothing duplicated
     assert {str(r["p_date"]) for r in dec.select("p_date").distinct().collect()} == {
         "2025-03-01", "__no_date__"
     }

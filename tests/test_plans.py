@@ -12,8 +12,11 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     fn, _ = QUERIES["doc_length_fail"]
     df = fn(spark, sf_dir)
     pushed = inspect.pushed_filters(df)
-    # the OR-of-range predicate is pushed to the parquet reader
-    assert any("n_chars" in p for p in pushed), pushed
+    # the OR-of-range predicate itself is pushed to the parquet reader, not
+    # just IsNotNull(n_chars): a DOUBLE bound against the BIGINT column
+    # would cast the column and stop the range at the scan
+    assert any("LessThan(n_chars" in p for p in pushed), pushed
+    assert any("GreaterThan(n_chars" in p for p in pushed), pushed
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):
