@@ -153,10 +153,11 @@ FROM pick LEFT JOIN v
 def q_decisions_history(spark, sf_dir):
     """Snapshot TIME TRAVEL through the pipeline's commit machinery
     (sources/snapshots.py — the same atomic-manifest path run_pipeline's
-    sinks ride): three versions committed (append 0-99, append 100-199,
-    replace with 900+), then the query reads version 2 — whose content
-    (doc_id < 200) must be unaffected by the later replace. The oracle
-    states that content declaratively. Scratch snapshots go to a fresh
+    sinks ride): three transactions committed to table "docs" (append
+    0-99, append 100-199, replace with 900+ via keep_prior=False), then
+    the query reads version 2 — whose content (doc_id < 200) must be
+    unaffected by the later replace. The oracle states that content
+    declaratively. Scratch snapshots go to a fresh
     per-pid temp dir and the grouped result (bounded: sources × langs)
     is MATERIALIZED before a finally-block rmtree of the query's own
     dir — returning a lazy plan over the scratch files would force the
@@ -180,10 +181,14 @@ def q_decisions_history(spark, sf_dir):
     root = tempfile.mkdtemp(prefix=f"snap_tt_{os.getpid()}_")
     try:
         docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-        snap.append(docs.filter(F.col("doc_id") < 100), root)                 # v1
-        snap.append(docs.filter(F.col("doc_id").between(100, 199)), root)     # v2
-        snap.replace(docs.filter(F.col("doc_id").between(900, 999)), root)    # v3
-        tt = snap.read_snapshot(spark, root, version=2)
+        for v, (part, keep_prior) in enumerate([
+            (docs.filter(F.col("doc_id") < 100), True),
+            (docs.filter(F.col("doc_id").between(100, 199)), True),
+            (docs.filter(F.col("doc_id").between(900, 999)), False),   # replace
+        ], 1):
+            rel = snap.write_table_data(part, root, "docs", v)
+            snap.commit_transaction(root, {"docs": [rel]}, keep_prior=keep_prior)
+        tt = snap.read_table(spark, root, "docs", version=2)
         out = tt.groupBy("source", "lang").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.min("doc_id").cast("long").alias("min_doc"),

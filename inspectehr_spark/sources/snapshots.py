@@ -6,12 +6,13 @@ actually relies on — ATOMIC snapshot commits, time travel, rollback and
 commit history — with nothing but parquet files and a manifest directory,
 so the same semantics hold in any environment:
 
-    <root>/data/c<version>-<uuid>/part-*.parquet   (immutable once committed)
-    <root>/data/c<version>-<uuid>/_schema.json     (the directory's read schema)
-    <root>/_manifests/v<version>.json              (file list + summary)
+    <root>/<table>/data/c<version>-<uuid>/part-*.parquet  (immutable once committed)
+    <root>/<table>/data/c<version>-<uuid>/_schema.json    (the directory's read schema)
+    <root>/_manifests/v<version>.json                     (tables + extra payload)
 
-A snapshot = one manifest listing every data directory visible at that
-version. Commit protocol (single-writer-wins optimistic concurrency):
+A snapshot = one manifest {"operation", "committed_at", "tables", "extra"}
+whose `tables` maps each table name to every data directory visible at
+that version. Commit protocol (single-writer-wins optimistic concurrency):
 
 1. write the new data directory (invisible — readers only trust manifests),
 2. read the current latest manifest, build the next file list,
@@ -38,8 +39,9 @@ a catalog service (HDFS/local rename is atomic; S3 needs a DynamoDB-style
 lock — same caveat Iceberg's HadoopCatalog documents).
 
 Reference analog: the reference's drop-then-rewrite output tables
-(R/perform_evaluation.R:172-174) are replace() here — but versioned, so a
-bad evaluation run is one rollback() away instead of destroyed."""
+(R/perform_evaluation.R:172-174) are commit_transaction(keep_prior=False)
+here — but versioned, so a bad evaluation run is one rollback() away
+instead of destroyed."""
 
 from __future__ import annotations
 
@@ -48,6 +50,7 @@ import os
 import re
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -55,10 +58,13 @@ from pyspark.sql.types import StructType
 _MANIFESTS = "_manifests"
 _DATA = "data"
 _SCHEMA = "_schema.json"
+_MAX_RETRIES = 10
 
 
 class CommitConflict(RuntimeError):
-    """Raised when `max_retries` successive commit attempts lost the race."""
+    """Raised when `_MAX_RETRIES` successive commit attempts lost the race,
+    or when a commit cannot be rebuilt on a concurrent one (a shadowed
+    non-additive commit, a compaction whose table changed underneath)."""
 
 
 class CommitDataLost(RuntimeError):
@@ -163,9 +169,9 @@ def latest_version(root: str) -> int | None:
 
 def history(root: str) -> list[dict]:
     """Commit log, oldest first: version, operation, timestamp, n_dirs
-    (for transaction manifests n_dirs counts across all tables and a
-    `tables` dir-count map is included), and the commit's `extra`
-    payload when it has one."""
+    (counted across all tables), a `tables` dir-count map when the
+    version has tables, and the commit's `extra` payload when it has
+    one."""
     out = []
     for v in _versions(root):
         m = _read_manifest(root, v)
@@ -174,7 +180,7 @@ def history(root: str) -> list[dict]:
             "version": v,
             "operation": m["operation"],
             "committed_at": m["committed_at"],
-            "n_dirs": len(m["dirs"]) + sum(len(d) for d in tbls.values()),
+            "n_dirs": sum(len(d) for d in tbls.values()),
         }
         if tbls:
             entry["tables"] = {k: len(d) for k, d in tbls.items()}
@@ -189,9 +195,7 @@ def _referenced_dirs(root: str) -> set[str]:
     time travel stays intact)."""
     refs: set[str] = set()
     for v in _versions(root):
-        m = _read_manifest(root, v)
-        refs.update(os.path.normpath(d) for d in m["dirs"])
-        for dirs in m.get("tables", {}).values():
+        for dirs in _read_manifest(root, v).get("tables", {}).values():
             refs.update(os.path.normpath(d) for d in dirs)
     return refs
 
@@ -232,16 +236,12 @@ def vacuum(root: str, grace_sec: float = 24 * 3600.0) -> list[str]:
     referenced = _referenced_dirs(root)
     now = time.time()
     deleted: list[str] = []
-    # data dirs live at <root>/data/c* (single-table) or <root>/<name>/data/c*
-    candidates = []
-    top_data = os.path.join(root, _DATA)
-    if os.path.isdir(top_data):
-        candidates.append((top_data, _DATA))
+    # data dirs live at <root>/<table>/data/c*
     for name in os.listdir(root):
-        sub = os.path.join(root, name, _DATA)
-        if name not in (_MANIFESTS, _DATA) and os.path.isdir(sub):
-            candidates.append((sub, os.path.join(name, _DATA)))
-    for abs_data, rel_data in candidates:
+        abs_data = os.path.join(root, name, _DATA)
+        if not os.path.isdir(abs_data):
+            continue
+        rel_data = os.path.join(name, _DATA)
         for d in os.listdir(abs_data):
             rel = os.path.normpath(os.path.join(rel_data, d))
             path = os.path.join(abs_data, d)
@@ -393,47 +393,40 @@ def _merge_extra(prior: dict, new: dict) -> dict:
     return merged
 
 
-def _corrective_merge(
-    root: str, base: int, nxt: int, shadowed: list[int], max_retries: int = 10
-) -> int:
+def _corrective_merge(root: str, base: int, nxt: int, shadowed: list[int]) -> int:
     """A parsable manifest landed in the squat-skipped range AFTER the
     pre-link re-check: v<nxt> (built on `base`, ignorant of the shadowed
     commits) is already visible and must never be unlinked. Fold the
-    shadowed commits' ADDITIONS relative to `base` — data dirs, per-table
-    dirs, extra payload — into a merge commit on top of the current
-    latest. Data-dir names are uuid-unique, so presence tests are exact
-    and the fold is idempotent. Returns the merge version.
+    shadowed commits' ADDITIONS relative to `base` — per-table dirs and
+    the extra payload — into a merge commit on top of the current latest.
+    Data-dir names are uuid-unique, so presence tests are exact and the
+    fold is idempotent. Returns the merge version.
 
     The fold is only sound for shadowed commits that are ADDITIVE
-    relative to their base (append / keep-prior txn / an earlier merge):
-    their entire intent is captured by `dirs - base_dirs`. A shadowed
-    replace(), rollback(), compact() or txn-replace carries DROP
-    semantics — dirs it meant to remove stay referenced through v<nxt>,
-    silently resurrecting replaced/rolled-back rows. That cannot be
-    replayed additively, so it raises CommitConflict: loud failure
-    (v<nxt> stays visible — a published manifest is never unlinked — and
-    the operator resolves the divergence with rollback()/replace())
-    rather than silent data resurrection. In Iceberg terms this is a
-    validation failure on concurrent conflicting commits."""
+    relative to their base (keep-prior txn / an earlier merge): their
+    entire intent is captured by `dirs - base_dirs`. A shadowed
+    rollback(), compact() or txn-replace carries DROP semantics — dirs it
+    meant to remove stay referenced through v<nxt>, silently resurrecting
+    replaced/rolled-back rows. That cannot be replayed additively, so it
+    raises CommitConflict: loud failure (v<nxt> stays visible — a
+    published manifest is never unlinked — and the operator resolves the
+    divergence with rollback() or a keep_prior=False transaction) rather
+    than silent data resurrection. In Iceberg terms this is a validation
+    failure on concurrent conflicting commits."""
     for v in shadowed:
         op = str(_read_manifest(root, v).get("operation", ""))
-        if not (op in ("append", "txn") or op.startswith("merge(")):
+        if not (op == "txn" or op.startswith("merge(")):
             raise CommitConflict(
                 f"shadowed non-additive commit v{v} ({op!r}) at {root}: its "
                 f"drop semantics cannot be additive-folded into v{nxt}; "
-                "resolve with rollback()/replace()"
+                "resolve with rollback() or a keep_prior=False transaction"
             )
     base_m = _read_manifest(root, base) if base else {}
-    base_dirs = set(base_m.get("dirs", []))
     base_tbls = {k: set(v) for k, v in base_m.get("tables", {}).items()}
-    add_dirs: list[str] = []
     add_tbls: dict[str, list[str]] = {}
     sh_extra: dict = {}
     for v in shadowed:
         m = _read_manifest(root, v)
-        for dd in m.get("dirs", []):
-            if dd not in base_dirs and dd not in add_dirs:
-                add_dirs.append(dd)
         for k, ds in m.get("tables", {}).items():
             have = base_tbls.get(k, set())
             acc = add_tbls.setdefault(k, [])
@@ -442,138 +435,53 @@ def _corrective_merge(
                     acc.append(dd)
         if m.get("extra"):
             sh_extra = _merge_extra(sh_extra, m["extra"])
-    for _ in range(max_retries):
-        cur = latest_version(root)          # ≥ nxt: v<nxt> is parsable
-        m = _read_manifest(root, cur)
-        dirs = list(m.get("dirs", []))
-        dirs += [dd for dd in add_dirs if dd not in set(dirs)]
-        tbls = {k: list(v) for k, v in m.get("tables", {}).items()}
+
+    def fold(latest: dict) -> tuple[dict, dict]:
+        tbls = {k: list(v) for k, v in latest.get("tables", {}).items()}
         for k, ds in add_tbls.items():
             have = set(tbls.get(k, []))
             tbls[k] = tbls.get(k, []) + [dd for dd in ds if dd not in have]
         # Latest's scalar extra wins (the shadowed values derive from
         # `base`); dates/batch_ids merge with union/max semantics.
-        ex = _merge_extra(sh_extra, m.get("extra", {})) if (
-            sh_extra or m.get("extra")
-        ) else None
-        merged = {
-            "operation": (
-                f"merge(shadowed v{shadowed[0]}..v{shadowed[-1]} into v{nxt})"
-            ),
-            "committed_at": time.time(),
-            "dirs": dirs,
-        }
-        if tbls:
-            merged["tables"] = tbls
-        if ex is not None:
-            merged["extra"] = ex
-        got = _publish(root, cur, merged)
-        if got is not None:
-            return got
-    raise CommitConflict(f"lost {max_retries} corrective-merge races at {root}")
+        return tbls, _merge_extra(sh_extra, latest.get("extra", {}))
+
+    return _commit(
+        root, f"merge(shadowed v{shadowed[0]}..v{shadowed[-1]} into v{nxt})",
+        [], fold,
+    )
 
 
-def _commit(root: str, operation: str, new_dirs: list[str], keep_prior: bool,
-            max_retries: int = 10, tables: dict | None = None,
-            extra: dict | None = None, carry_tables: bool = False) -> int:
-    for _ in range(max_retries):
+def _commit(root: str, operation: str, new_dirs: list[str],
+            build: Callable[[dict], tuple[dict, dict]]) -> int:
+    """The one optimistic commit loop. Each attempt reads the latest
+    manifest ({} on an empty root), asks `build` for the new version's
+    `(tables, extra)` on top of it, touches the commit's `new_dirs`
+    (`_touch_new_dirs`) and publishes; a lost race re-reads and retries.
+    `build` raises CommitConflict when the commit cannot be rebuilt on a
+    concurrent one. Returns the committed version."""
+    for _ in range(_MAX_RETRIES):
         cur = latest_version(root)
-        dirs = list(new_dirs)
-        mtables, mextra = tables, extra
-        if (keep_prior or carry_tables) and cur is not None:
-            prior = _read_manifest(root, cur)
-            if keep_prior:
-                dirs = prior["dirs"] + dirs
-            # Mixed-mode safety: a single-table append — or a replace,
-            # which replaces ONLY `dirs` (carry_tables) — on a root whose
-            # latest manifest is a multi-table transaction must CARRY the
-            # transaction content through, not silently drop it (which
-            # would make every read_table see an 'empty' table and erase
-            # the streaming replay guard / resume dates in `extra`,
-            # re-arming double-commits on the next crash replay).
-            if mtables is None and prior.get("tables"):
-                mtables = prior["tables"]
-            if mextra is None and prior.get("extra"):
-                mextra = prior["extra"]
+        tables, extra = build({} if cur is None else _read_manifest(root, cur))
         manifest = {
             "operation": operation,
             "committed_at": time.time(),
-            "dirs": dirs,
+            "tables": tables,
+            "extra": extra,
         }
-        if mtables is not None:
-            manifest["tables"] = mtables
-        if mextra is not None:
-            manifest["extra"] = mextra
         _touch_new_dirs(root, new_dirs)
         got = _publish(root, cur, manifest)
         if got is not None:
             return got
-    raise CommitConflict(f"lost {max_retries} commit races at {root}")
-
-
-def _write_dir(df: DataFrame, root: str, rel: str,
-               partition_col: str | None) -> str:
-    """Write `df` as the new data directory `rel` under `root`, then record
-    in its `_schema.json` the schema a read of it returns: the data
-    columns, then the partition column (partition discovery puts it last),
-    each with the type the writer wrote."""
-    path = os.path.join(root, rel)
-    w = df.write.mode("error")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)
-    fields = sorted(df.schema.fields, key=lambda f: f.name == partition_col)
-    with open(os.path.join(path, _SCHEMA), "w") as fh:
-        fh.write(StructType(fields).json())
-    return rel
-
-
-def _write_data(df: DataFrame, root: str, version_hint: int,
-                partition_col: str | None) -> str:
-    rel = os.path.join(_DATA, f"c{version_hint}-{uuid.uuid4().hex[:12]}")
-    return _write_dir(df, root, rel, partition_col)
-
-
-def append(df: DataFrame, root: str, partition_col: str | None = None) -> int:
-    """Atomically append `df` as a new snapshot; returns the new version."""
-    rel = _write_data(df, root, (latest_version(root) or 0) + 1, partition_col)
-    return _commit(root, "append", [rel], keep_prior=True)
-
-
-def replace(df: DataFrame, root: str, partition_col: str | None = None) -> int:
-    """Atomically replace table contents (drop-and-rewrite, versioned).
-
-    Replaces ONLY the single-table `dirs` content: on a root that also
-    holds multi-table transaction tables and an `extra` payload (resume
-    dates, streaming batch_ids), those carry through unchanged —
-    `append` and `rollback` already guaranteed this; a replace that
-    dropped them would silently erase the replay guard."""
-    rel = _write_data(df, root, (latest_version(root) or 0) + 1, partition_col)
-    return _commit(root, "replace", [rel], keep_prior=False, carry_tables=True)
-
-
-def rollback(root: str, to_version: int) -> int:
-    """Make an old snapshot current again by committing a NEW version with
-    its content (single-table dirs AND multi-table tables/extra) — history
-    is never rewritten (Iceberg rollback)."""
-    m = _read_manifest(root, to_version)
-    return _commit(
-        root,
-        f"rollback(v{to_version})",
-        m["dirs"],
-        keep_prior=False,
-        tables=m.get("tables"),
-        extra=m.get("extra"),
-    )
+    raise CommitConflict(f"lost {_MAX_RETRIES} {operation} commit races at {root}")
 
 
 # ---------------------------------------------------------------------------
-# Multi-table transactions: one manifest covers several named tables plus an
+# Tables and transactions: one manifest covers several named tables plus an
 # arbitrary `extra` payload (the pipeline stores its processed-date set
 # there), so decisions/failures/metrics and the resume record commit in ONE
 # atomic publish — a crash at any earlier point leaves nothing visible.
 # Manifest schema: {"operation", "committed_at", "tables": {name: [dirs]},
-# "extra": {...}, "dirs": []} — `dirs` stays for the single-table API.
+# "extra": {...}}.
 # ---------------------------------------------------------------------------
 
 
@@ -585,9 +493,20 @@ def write_table_data(
     partition_col: str | None = None,
 ) -> str:
     """Write `df` as an (invisible until committed) data directory of table
-    `name` under `root`; returns the manifest-relative path."""
+    `name` under `root`; returns the manifest-relative path. The
+    directory's `_schema.json` records the schema a read of it returns:
+    the data columns, then the partition column (partition discovery puts
+    it last), each with the type the writer wrote."""
     rel = os.path.join(name, _DATA, f"c{version_hint}-{uuid.uuid4().hex[:12]}")
-    return _write_dir(df, root, rel, partition_col)
+    path = os.path.join(root, rel)
+    w = df.write.mode("error")
+    if partition_col:
+        w = w.partitionBy(partition_col)
+    w.parquet(path)
+    fields = sorted(df.schema.fields, key=lambda f: f.name == partition_col)
+    with open(os.path.join(path, _SCHEMA), "w") as fh:
+        fh.write(StructType(fields).json())
+    return rel
 
 
 def commit_transaction(
@@ -595,56 +514,56 @@ def commit_transaction(
     tables_rel: dict[str, list[str]],
     extra: dict | None = None,
     keep_prior: bool = True,
-    max_retries: int = 10,
 ) -> int:
     """Atomically commit new data directories for several tables at once.
 
     With `keep_prior`, each table's new dirs APPEND to its prior list and
-    `extra["dates"]` merges with the prior date set (the pipeline's resume
-    record); without, the new lists replace everything. Optimistic retry
-    against concurrent committers, same arbitration as `_commit`."""
-    for _ in range(max_retries):
-        cur = latest_version(root)
+    `extra` overlays the prior payload (`_merge_extra`); without, the new
+    lists and payload replace everything. Optimistic retry against
+    concurrent committers (`_commit`)."""
+
+    def build(prior: dict) -> tuple[dict, dict]:
         tbls = {k: list(v) for k, v in tables_rel.items()}
         ex = dict(extra or {})
-        dirs: list[str] = []
-        if keep_prior and cur is not None:
-            m = _read_manifest(root, cur)
-            dirs = list(m.get("dirs", []))  # carry single-table content too
-            for k, prior in m.get("tables", {}).items():
-                tbls[k] = prior + tbls.get(k, [])
+        if keep_prior and prior:
+            for k, dirs in prior.get("tables", {}).items():
+                tbls[k] = dirs + tbls.get(k, [])
             # extra: start from the WHOLE prior payload and overlay the new
             # keys — dropping unmentioned keys (e.g. the streaming sinks'
             # replay records) would silently disable downstream guards that
             # read them. "dates" gets set-union semantics (the resume
             # record) and "batch_ids" per-key max-merge (one sink's commit
             # must not erase another ingest's replay record).
-            ex = _merge_extra(m.get("extra", {}), ex)
-        manifest = {
-            # keep_prior is recorded in the operation name: a corrective
-            # merge may only additive-fold commits that APPEND relative
-            # to their base ("txn"); a replace-mode transaction
-            # ("txn-replace") carries drop semantics it cannot replay.
-            "operation": "txn" if keep_prior else "txn-replace",
-            "committed_at": time.time(),
-            "tables": tbls,
-            "extra": ex,
-            "dirs": dirs,
-        }
-        _touch_new_dirs(
-            root, [r for rels in tables_rel.values() for r in rels]
-        )
-        got = _publish(root, cur, manifest)
-        if got is not None:
-            return got
-    raise CommitConflict(f"lost {max_retries} commit races at {root}")
+            ex = _merge_extra(prior.get("extra", {}), ex)
+        return tbls, ex
+
+    # keep_prior is recorded in the operation name: a corrective merge may
+    # only additive-fold commits that APPEND relative to their base
+    # ("txn"); a replace-mode transaction ("txn-replace") carries drop
+    # semantics it cannot replay.
+    return _commit(
+        root, "txn" if keep_prior else "txn-replace",
+        [r for rels in tables_rel.values() for r in rels], build,
+    )
+
+
+def rollback(root: str, to_version: int) -> int:
+    """Make an old snapshot current again by committing a NEW version with
+    its tables and extra payload — history is never rewritten (Iceberg
+    rollback)."""
+    m = _read_manifest(root, to_version)
+    return _commit(
+        root, f"rollback(v{to_version})", [],
+        lambda _latest: (m.get("tables", {}), m.get("extra", {})),
+    )
 
 
 def read_table(
     spark: SparkSession, root: str, name: str, version: int | None = None
 ) -> DataFrame:
-    """Read one table of a multi-table snapshot (latest version or time
-    travel to `version`)."""
+    """Read one table of a snapshot (latest version or time travel to
+    `version`). Reads exactly the data directories that manifest names;
+    uncommitted directories on disk are invisible."""
     v = latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed snapshots at {root}")
@@ -660,21 +579,6 @@ def latest_extra(root: str) -> dict:
     if v is None:
         return {}
     return _read_manifest(root, v).get("extra", {})
-
-
-def read_snapshot(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Read a snapshot: the latest by default, or time-travel to `version`.
-    Reads exactly the data directories that manifest names; uncommitted
-    directories on disk are invisible."""
-    v = latest_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshots at {root}")
-    dirs = _read_manifest(root, v)["dirs"]
-    if not dirs:
-        raise FileNotFoundError(f"snapshot v{v} at {root} is empty")
-    return _read_dirs(spark, root, dirs)
 
 
 def _read_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -708,73 +612,46 @@ def _read_dirs(spark: SparkSession, root: str, dirs: list[str]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 
+
+
 def compact(
     spark: SparkSession,
     root: str,
-    table: str | None = None,
+    table: str,
     partition_col: str | None = None,
-    max_retries: int = 10,
 ) -> int:
     """Rewrite a table's accumulated data directories into ONE — the
     Iceberg rewrite-data-files analog. A streaming sink commits one data
     dir per micro-batch, so after B batches every read unions B scans;
-    compaction reads the LATEST snapshot, writes it as a single
-    directory, and commits a new version whose dir list is just that
-    directory. History is untouched (old versions still time-travel to
-    the un-compacted dirs; `vacuum` reclaims them only when no manifest
-    references them, which compaction deliberately preserves), and for
-    multi-table roots the OTHER tables and the `extra` payload (resume
+    compaction reads the table at the LATEST snapshot, writes it as a
+    single directory, and commits a new version whose dir list for
+    `table` is just that directory. History is untouched (old versions
+    still time-travel to the un-compacted dirs; `vacuum` reclaims them
+    only when no manifest references them, which compaction deliberately
+    preserves), and the OTHER tables and the `extra` payload (resume
     dates, streaming batch ids) carry through unchanged.
 
-    CONFLICT SAFETY (both paths): the compacted directory is a rewrite
-    of version v's content — if ANY commit lands after v, publishing it
-    would silently drop that commit's data, so compaction re-checks the
-    latest version each attempt and raises CommitConflict when the
-    compacted content changed underneath it (concurrent commits that
-    touched only OTHER tables of a transaction root are folded through).
-    Run compaction in the ingest pause for strict isolation, as Iceberg
+    CONFLICT SAFETY: the compacted directory is a rewrite of version v's
+    content — if a later commit changed `table`, publishing it would
+    silently drop that commit's data, so each attempt raises
+    CommitConflict when the table's dir list differs from v's (concurrent
+    commits that touched only OTHER tables are folded through). Run
+    compaction in the ingest pause for strict isolation, as Iceberg
     recommends for its equivalent. Returns the new version."""
     v = latest_version(root)
     if v is None:
         raise FileNotFoundError(f"no committed snapshots at {root}")
-    m = _read_manifest(root, v)
-    if table is None:
-        df = read_snapshot(spark, root, version=v)
-        rel = _write_data(df, root, v + 1, partition_col)
-        compacted_key, compacted_val = "dirs", m.get("dirs", [])
-    else:
-        df = read_table(spark, root, table, version=v)
-        rel = write_table_data(df, root, table, v + 1, partition_col)
-        compacted_key, compacted_val = table, m.get("tables", {}).get(table)
+    compacted = _read_manifest(root, v).get("tables", {}).get(table)
+    df = read_table(spark, root, table, version=v)
+    rel = write_table_data(df, root, table, v + 1, partition_col)
 
-    for _ in range(max_retries):
-        cur = latest_version(root)
-        if cur != v:
-            m2 = _read_manifest(root, cur)
-            now_val = (
-                m2.get("dirs", [])
-                if table is None
-                else m2.get("tables", {}).get(table)
+    def build(latest: dict) -> tuple[dict, dict]:
+        tbls = {k: list(d) for k, d in latest.get("tables", {}).items()}
+        if tbls.get(table) != compacted:
+            raise CommitConflict(
+                f"{table!r} changed during compaction at {root}"
             )
-            if now_val != compacted_val:
-                raise CommitConflict(
-                    f"{compacted_key!r} changed during compaction at {root}"
-                )
-            m, v = m2, cur      # only other tables/extra changed: fold in
-        tbls = {k: list(d) for k, d in m.get("tables", {}).items()}
-        dirs = list(m.get("dirs", []))
-        if table is None:
-            dirs = [rel]
-        else:
-            tbls[table] = [rel]
-        manifest = {
-            "operation": f"compact({table or 'dirs'},v{v})",
-            "committed_at": time.time(),
-            "dirs": dirs,
-            "tables": tbls,
-            "extra": m.get("extra", {}),
-        }
-        got = _publish(root, v, manifest)
-        if got is not None:
-            return got
-    raise CommitConflict(f"lost {max_retries} compaction commit races at {root}")
+        tbls[table] = [rel]
+        return tbls, latest.get("extra", {})
+
+    return _commit(root, f"compact({table},v{v})", [rel], build)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from inspectehr_spark.rules import Rule
 from inspectehr_spark.operators.checks import run_battery
+from inspectehr_spark.sources import snapshots as snap
 
 
 def stream_failure_log(
@@ -176,7 +177,7 @@ def _ingest_id(checkpoint_dir: str) -> str:
             "identity and the restarted batches 0..N will be discarded as "
             "replays. Pass an explicit ingest_id= to the sink for remote "
             "checkpoints.",
-            stacklevel=3,
+            stacklevel=4,
         )
         return "path-" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:16]
     os.makedirs(checkpoint_dir, exist_ok=True)
@@ -200,15 +201,54 @@ def _ingest_id(checkpoint_dir: str) -> str:
     return ident
 
 
-def _replayed(extra: dict, ingest_id: str, batch_id: int) -> bool:
-    """True iff this (ingest_id, batch_id) already committed. The guard
-    is a PER-INGEST map (extra['batch_ids']) so two sinks sharing one
-    root can't erase each other's replay records. This is the single
-    authoritative scheme — a table written by a pre-map build would need
-    its flat batch_id folded into the map once (no such tables exist;
-    the flat keys never shipped)."""
-    last = extra.get("batch_ids", {}).get(ingest_id)
+def _replayed(root: str, ingest_id: str, batch_id: int) -> bool:
+    """True iff this (ingest_id, batch_id) already committed at `root`.
+    The guard is a PER-INGEST map (the latest manifest's
+    extra['batch_ids']) so two sinks sharing one root can't erase each
+    other's replay records. This is the single authoritative scheme — a
+    table written by a pre-map build would need its flat batch_id folded
+    into the map once (no such tables exist; the flat keys never
+    shipped)."""
+    last = snap.latest_extra(root).get("batch_ids", {}).get(ingest_id)
     return last is not None and batch_id <= last
+
+
+def _commit_batch_tables(
+    root: str,
+    frames: dict[str, DataFrame],
+    batch_id: int,
+    ingest_id: str,
+    partition_col: str | None,
+) -> None:
+    """Write each of a micro-batch's tables as a new data directory
+    (`partition_col` applies to the 'stream' table only) and commit them
+    all in ONE transaction that records (ingest_id, batch_id) for the
+    replay guard — so an index table can never diverge from the data."""
+    hint = (snap.latest_version(root) or 0) + 1
+    rels = {
+        name: [snap.write_table_data(
+            df, root, name, hint,
+            partition_col=partition_col if name == "stream" else None,
+        )]
+        for name, df in frames.items()
+    }
+    snap.commit_transaction(
+        root, rels, extra={"batch_ids": {ingest_id: batch_id}}, keep_prior=True
+    )
+
+
+def _start_sink(stream: DataFrame, checkpoint_dir: str, trigger_once: bool,
+                ingest_id: str | None, commit):
+    """Start `stream` with `commit(batch_df, batch_id, ingest_id)` as its
+    foreachBatch, under `checkpoint_dir`; the ingest identity defaults to
+    the checkpoint's (see _ingest_id). Returns the started query."""
+    iid = ingest_id if ingest_id is not None else _ingest_id(checkpoint_dir)
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: commit(batch_df, batch_id, iid)
+    ).option("checkpointLocation", checkpoint_dir)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _commit_stream_batch(
@@ -225,20 +265,12 @@ def _commit_stream_batch(
     checkpoint commit-log write is recognized and skipped — while a NEW
     ingest (fresh checkpoint → new ingest_id → batch ids restart at 0)
     commits normally instead of being silently discarded."""
-    from inspectehr_spark.sources import snapshots as snap
-
-    if _replayed(snap.latest_extra(root), ingest_id, batch_id):
+    if _replayed(root, ingest_id, batch_id):
         return False                      # already committed; crash replay
     if not batch_df.take(1):
         return False
-    rel = snap.write_table_data(
-        batch_df, root, "stream", (snap.latest_version(root) or 0) + 1,
-        partition_col=partition_col,
-    )
-    snap.commit_transaction(
-        root, {"stream": [rel]},
-        extra={"batch_ids": {ingest_id: batch_id}},
-        keep_prior=True,
+    _commit_batch_tables(
+        root, {"stream": batch_df}, batch_id, ingest_id, partition_col
     )
     return True
 
@@ -266,19 +298,12 @@ def snapshot_sink(
     restarted batches as replays (see _ingest_id).
 
     Returns the started StreamingQuery (caller awaits/stops)."""
-    iid = ingest_id if ingest_id is not None else _ingest_id(checkpoint_dir)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _commit_stream_batch(
+    return _start_sink(
+        stream, checkpoint_dir, trigger_once, ingest_id,
+        lambda batch_df, batch_id, iid: _commit_stream_batch(
             batch_df, batch_id, root, partition_col, ingest_id=iid
-        )
-
-    writer = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _dedup_commit_batch(
@@ -306,9 +331,8 @@ def _dedup_commit_batch(
     10^12 docs persist the hashes table bucketed by h1 so the join is
     storage-partitioned instead of reshuffling history per batch."""
     from inspectehr_spark.pipeline.run import flag_exact_duplicates
-    from inspectehr_spark.sources import snapshots as snap
 
-    if _replayed(snap.latest_extra(root), ingest_id, batch_id):
+    if _replayed(root, ingest_id, batch_id):
         return 0                              # crash replay — already committed
     hashed = batch_df.withColumn("_h1", F.xxhash64(text_col)).withColumn(
         "_h2", F.xxhash64(F.lit(1), text_col)
@@ -334,19 +358,11 @@ def _dedup_commit_batch(
     try:
         if not fresh.take(1):
             return 0
-        hint = (snap.latest_version(root) or 0) + 1
-        rel_rows = snap.write_table_data(
-            fresh.drop("_h1", "_h2"), root, "stream", hint,
-            partition_col=partition_col,
-        )
-        rel_hash = snap.write_table_data(
-            fresh.select("_h1", "_h2"), root, "hashes", hint
-        )
-        snap.commit_transaction(
+        _commit_batch_tables(
             root,
-            {"stream": [rel_rows], "hashes": [rel_hash]},
-            extra={"batch_ids": {ingest_id: batch_id}},
-            keep_prior=True,
+            {"stream": fresh.drop("_h1", "_h2"),
+             "hashes": fresh.select("_h1", "_h2")},
+            batch_id, ingest_id, partition_col,
         )
         return fresh.count()              # reads the cache, no recompute
     finally:
@@ -371,20 +387,13 @@ def dedup_snapshot_sink(
     Replay-safe via the committed (ingest_id, batch_id); pass an explicit
     `ingest_id` for remote (URI) checkpoints (see _ingest_id). Returns
     the started query."""
-    iid = ingest_id if ingest_id is not None else _ingest_id(checkpoint_dir)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _dedup_commit_batch(
+    return _start_sink(
+        stream, checkpoint_dir, trigger_once, ingest_id,
+        lambda batch_df, batch_id, iid: _dedup_commit_batch(
             batch_df, batch_id, root, text_col, id_col, partition_col,
             ingest_id=iid,
-        )
-
-    writer = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _near_dup_commit_batch(
@@ -442,9 +451,8 @@ def _near_dup_commit_batch(
         with_minhash_signature,
         with_shingles,
     )
-    from inspectehr_spark.sources import snapshots as snap
 
-    if _replayed(snap.latest_extra(root), ingest_id, batch_id):
+    if _replayed(root, ingest_id, batch_id):
         return 0
     rows_per_band = num_hashes // bands
     spark = batch_df.sparkSession
@@ -504,7 +512,6 @@ def _near_dup_join_and_commit(
     jaccard_threshold, bucket_cap, partition_col, ingest_id, spark,
 ) -> int:
     from inspectehr_spark.operators.dedup import band_pairs, cap_buckets
-    from inspectehr_spark.sources import snapshots as snap
 
     # --- history near-dups: batch bands ⋈ committed band index ---
     losers = None
@@ -560,17 +567,10 @@ def _near_dup_join_and_commit(
             kept_bands = kept_sigs.select(
                 "_nd_id", "_nd_sig", F.explode(band_arr).alias("b")
             ).select("b.band_id", F.col("b.band_key").alias("band_hash"), "_nd_id")
-            hint = (snap.latest_version(root) or 0) + 1
-            rel_rows = snap.write_table_data(
-                fresh, root, "stream", hint, partition_col=partition_col
-            )
-            rel_bands = snap.write_table_data(kept_bands, root, "bands", hint)
-            rel_sigs = snap.write_table_data(kept_sigs, root, "sigs", hint)
-            snap.commit_transaction(
+            _commit_batch_tables(
                 root,
-                {"stream": [rel_rows], "bands": [rel_bands], "sigs": [rel_sigs]},
-                extra={"batch_ids": {ingest_id: batch_id}},
-                keep_prior=True,
+                {"stream": fresh, "bands": kept_bands, "sigs": kept_sigs},
+                batch_id, ingest_id, partition_col,
             )
             return fresh.count()
         finally:
@@ -599,18 +599,11 @@ def near_dup_snapshot_sink(
     semantics the batch path has (verdict r4 stretch). Survivors, band
     index and signatures commit atomically per micro-batch; replay-safe
     via (ingest_id, batch_id). Returns the started query."""
-    iid = ingest_id if ingest_id is not None else _ingest_id(checkpoint_dir)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _near_dup_commit_batch(
+    return _start_sink(
+        stream, checkpoint_dir, trigger_once, ingest_id,
+        lambda batch_df, batch_id, iid: _near_dup_commit_batch(
             batch_df, batch_id, root, text_col, id_col,
             num_hashes, bands, jaccard_threshold,
             partition_col, ingest_id=iid, bucket_cap=bucket_cap,
-        )
-
-    writer = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
