@@ -26,6 +26,10 @@ _DRIVER_PRIORITY = [
     # rewritten onto operators/distribution.ks_pairwise: its new code path
     # needs an oracle-checked row in the first 50
     "ks_drift",
+    # rewritten onto the one dedup.minhash_signature / minhash_lsh_duplicates
+    # (md5 hash family): their new code path needs an oracle-checked row
+    "minhash_lsh_pairs",
+    "minhash_band_signature",
     # NEW r6 — PSL eTLD+1, the xxhash64 MinHash scale path (rows-only),
     # SemDeDup semantic dedup, temperature-rebalanced sampling, DSIR
     # importance weights, ExactSubstr span dedup, language deciles
@@ -98,7 +102,6 @@ _DRIVER_PRIORITY = [
     "decisions_history",
     # veterans (green in r5, code untouched this round)
     "blocked_domain_audit",
-    "minhash_lsh_pairs",
     "simhash_fingerprints",
     "ann_lsh_topk",
     "simhash_hamming_pairs",
@@ -136,7 +139,6 @@ _DRIVER_PRIORITY = [
     "failure_tally",
     "tpch_q3_shipping",
     "tpch_q5_local_volume",
-    "minhash_band_signature",
     "ivf_topk",
     "bpe_token_counts",
     "near_dup_components",

@@ -4,11 +4,14 @@ exact-duplicate verdict is `pipeline/run.flag_exact_duplicates`.
 The reference only has coincident-key duplicate flagging
 (R/evaluate_duplication.R); web-scale training-data pipelines need near-dup
 too. Everything here is expression-level (hash/xxhash64/transform over
-arrays) — no Python in the hot path. Every banded near-dup path (MinHash,
-SimHash, the md5 registry replay, the streaming battery) takes its
-candidates from `band_pairs`: an equi-join on (band_id, band_key), which
-Spark shuffles by the band key — candidate pairs only, never the O(n²)
-cross product — over buckets capped by `cap_buckets`.
+arrays) — no Python in the hot path. MinHash has one implementation for
+both hash families (`hash_fn`): `minhash_signature`, `_minhash_bands` and
+`_agreement` serve the registry's md5 replay, the xxhash64 scale path and
+the streaming battery alike. Every banded near-dup path (MinHash, SimHash,
+the streaming battery) takes its candidates from `band_pairs`: an
+equi-join on (band_id, band_key), which Spark shuffles by the band key —
+candidate pairs only, never the O(n²) cross product — over buckets capped
+by `cap_buckets`.
 
 IMPORTANT evaluation-cost rule observed throughout: any expression used
 inside a higher-order-function lambda is first MATERIALIZED as a column
@@ -40,25 +43,6 @@ def with_shingles(
     staged = staged.withColumn("_grams", grams)
     sh = F.transform(F.col("_grams"), lambda g: F.xxhash64(g))
     return staged.withColumn(out_col, sh).drop("_toks", "_grams")
-
-
-def with_minhash_signature(
-    df: DataFrame,
-    shingle_col: str = "shingles",
-    out_col: str = "sig",
-    num_hashes: int = 64,
-) -> DataFrame:
-    """Add an array<long> MinHash signature: h_i(x) = xxhash64(x, seed=i),
-    signature[i] = min over shingles. array_min(transform(...)) per hash,
-    over a materialized shingle column — JVM-side only."""
-    sh = F.col(shingle_col)
-
-    def perm_min(i: int):
-        return F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-
-    return df.withColumn(
-        out_col, F.array(*[perm_min(i) for i in range(num_hashes)])
-    )
 
 
 def cap_buckets(
@@ -125,6 +109,141 @@ def band_pairs(
     )
 
 
+def _band_rows(num_hashes: int, bands: int) -> int:
+    """Signature elements per LSH band. A geometry whose bands do not
+    split the signature evenly is refused: 64 hashes in 10 bands would
+    band on only 60 of them."""
+    if not 0 < bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            "bands must divide num_hashes and be at least 1 "
+            f"(got {bands} bands for {num_hashes} hashes)"
+        )
+    return num_hashes // bands
+
+
+def minhash_signature(
+    df: DataFrame,
+    num_hashes: int,
+    hash_fn: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    ngram: int = 3,
+) -> DataFrame:
+    """(id_col, sig): the MinHash signature of every document with at
+    least `ngram` tokens. Tokens are the non-empty pieces of `text_col`
+    split on ' ', shingles their word `ngram`-grams, and sig[i] is the min
+    over shingles of h_i(gram):
+
+    - ``md5``: md5(gram || '|' || i), lexicographic min, array<string>.
+      ENGINE-REPLAYABLE, so the registry queries get DuckDB value oracles.
+    - ``xxhash64``: xxhash64(xxhash64(gram), i), array<bigint>. Per
+      (gram, i) an xxhash64 of a long instead of an md5 of a string: the
+      scale path.
+
+    Shorter documents have no shingles and are absent (same in the DuckDB
+    replay). `id_col` must be unique per document. No exchange: a caller
+    scanning a one-file table puts `tables.parallel_scan` in front.
+
+    md5 shape (r7): ONE aggregate pass of num_hashes running minima folded
+    via zip_with/least ('g' sorts after every hex digit so it is the
+    identity; the nested lambda avoids the `lambda g, i=i:` two-parameter
+    HOF capture trap). Measured at sf0.1/local[32] and rejected: a
+    32-column codegen min() aggregation (explode + flat md5 projections)
+    paid ~4 s of agg codegen+exec and a doc-keyed exchange (7.7 s cold vs
+    3.5 s); a fully-exploded (gram, salt) min paid a 48M-row explode
+    (34 s). xxhash64 shape: the gram hashes are a staged column, then one
+    array_min per i."""
+    from inspectehr_spark.functions.textfns import word_ngrams
+
+    if hash_fn not in ("md5", "xxhash64"):
+        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+    # Filter on the token count, not on the grams: Catalyst pushes the
+    # filter below the caller's parallel_scan onto the one-core scan, and
+    # there the count costs a split where the grams cost the whole gram
+    # expression (sf0.1 xxhash64 pairs on local[4]: 0.89 s against 1.09 s,
+    # min of 5).
+    staged = df.withColumn(
+        "_toks", F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    ).filter(F.size("_toks") >= ngram)
+    staged = staged.withColumn("_grams", word_ngrams(F.col("_toks"), ngram))
+
+    if hash_fn == "md5":
+        def _md5s(g):
+            return F.transform(
+                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+                lambda i: F.md5(F.concat(g, F.lit("|"), i.cast("string"))),
+            )
+
+        sig = F.aggregate(
+            F.col("_grams"),
+            F.array_repeat(F.lit("g"), num_hashes),
+            lambda acc, g: F.zip_with(acc, _md5s(g), lambda a, m: F.least(a, m)),
+        )
+    else:
+        staged = staged.withColumn(
+            "_sh", F.transform(F.col("_grams"), lambda g: F.xxhash64(g))
+        )
+        sig = F.array(
+            *[
+                F.array_min(F.transform("_sh", lambda s: F.xxhash64(s, F.lit(i))))
+                for i in range(num_hashes)
+            ]
+        )
+    return staged.select(id_col, sig.alias("sig"))
+
+
+def _minhash_bands(
+    sig: Column, num_hashes: int, bands: int, hash_fn: str
+) -> Column:
+    """array<struct<band_id int, band_key>> over a `minhash_signature`:
+    band b keys its slice of `_band_rows` elements, md5(concat_ws('',
+    slice)) for md5 (the DuckDB replay's md5(h_i || ...)) and
+    xxhash64(slice) for xxhash64."""
+    rows = _band_rows(num_hashes, bands)
+
+    def key(part: Column) -> Column:
+        return F.md5(F.concat_ws("", part)) if hash_fn == "md5" else F.xxhash64(part)
+
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                key(F.slice(sig, b * rows + 1, rows)).alias("band_key"),
+            )
+            for b in range(bands)
+        ]
+    )
+
+
+def _agreement(a: str, b: str, num_hashes: int) -> Column:
+    """Estimated Jaccard of two signatures: the fraction of their
+    `num_hashes` positions that agree."""
+    return F.size(
+        F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq)
+    ) / F.lit(num_hashes)
+
+
+def _verified_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    hash_fn: str,
+    jaccard_threshold: float,
+    bucket_cap: int,
+) -> DataFrame:
+    """(<id>_a, <id>_b, est_jaccard), a < b: the `band_pairs` of an
+    (id_col, sig) `minhash_signature` table, the signature carried
+    through the band join, kept where `_agreement` >= threshold."""
+    bands_col = _minhash_bands(F.col("sig"), num_hashes, bands, hash_fn)
+    pairs = band_pairs(sigs, id_col, bands_col, bucket_cap, carry=("sig",))
+    return pairs.select(
+        f"{id_col}_a",
+        f"{id_col}_b",
+        _agreement("sig_a", "sig_b", num_hashes).alias("est_jaccard"),
+    ).filter(F.col("est_jaccard") >= jaccard_threshold)
+
+
 def minhash_lsh_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -134,58 +253,31 @@ def minhash_lsh_duplicates(
     ngram: int = 3,
     jaccard_threshold: float = 0.8,
     bucket_cap: int = 64,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Near-duplicate pairs via MinHash + banded LSH.
-
-    shingle → signature → `bands` band hashes → candidate pairs share
-    (band_id, band_key) → verify estimated Jaccard (signature agreement
-    fraction) ≥ threshold. Returns (doc_id_a, doc_id_b, est_jaccard), a < b.
+    """Near-duplicate pairs via MinHash + banded LSH, the one MinHash pair
+    operator: `minhash_signature` → `bands` band keys → candidate pairs
+    share (band_id, band_key) → verify estimated Jaccard (signature
+    agreement fraction) ≥ threshold. Returns (doc_id_a, doc_id_b,
+    est_jaccard), a < b. `hash_fn="md5"` is the registry's oracle-replay
+    family, "xxhash64" the scale path (see `minhash_signature`).
 
     Scale: the only shuffles are the band-key self-join and the final
     dedup; both keyed equi-ops (`band_pairs`). Hot buckets keep their
     `bucket_cap` lowest ids (`cap_buckets`). The signature rides through
-    the band join.
-    """
-    rows_per_band = num_hashes // bands
+    the band join and is not persisted: at sf0.01 the md5 carry ties the
+    persisted, joined-back-by-id shape, and for xxhash64 the cache build
+    cost more than the recompute it saved (r7: ~2x slower at sf0.1). The
+    scan is parallelized first: at staged sf1 the single-core sketch was
+    12.7 s of the query's 12.7 s."""
     from inspectehr_spark.tables import parallel_scan
 
-    # NOTE r7: the md5 twin's PERSIST was also tried here and measured ~2x
-    # SLOWER at sf0.1 (the xxhash64 sketch is cheap enough that the cache
-    # build costs more than the double-compute it avoids) — only the scan
-    # parallelization is kept (at staged sf1 the single-core sketch was
-    # the dominant cost: 12.7 s of the query's 12.7 s).
-    sigs = with_minhash_signature(
-        with_shingles(
-            parallel_scan(df.select(F.col(id_col).alias("doc_id"), text_col)),
-            text_col=text_col, n=ngram,
-        ),
-        num_hashes=num_hashes,
-    ).select("doc_id", "sig")
-
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
+    sigs = minhash_signature(
+        parallel_scan(df.select(F.col(id_col).alias("doc_id"), text_col)),
+        num_hashes, hash_fn, text_col=text_col, ngram=ngram,
     )
-    pairs = band_pairs(sigs, "doc_id", band_arr, bucket_cap, carry=("sig",))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        )
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
-    return (
-        pairs.select("doc_id_a", "doc_id_b", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
+    return _verified_pairs(
+        sigs, "doc_id", num_hashes, bands, hash_fn, jaccard_threshold, bucket_cap
     )
 
 
@@ -409,60 +501,6 @@ def contamination_flags(
     )
 
 
-def md5_minhash_signature(
-    df: DataFrame,
-    num_hashes: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 3,
-) -> DataFrame:
-    """(id_col, _sig array<string>[num_hashes]) — MinHash signature with
-    ENGINE-REPLAYABLE hashes: h_i(gram) = md5(gram || '|i'), element =
-    lexicographic min over the doc's word n-grams. Docs with < `ngram`
-    tokens have no shingles and are absent (same in the DuckDB replay).
-    Requires `id_col` to be unique per document (it keys the aggregation).
-
-    This is the shared construction behind the `minhash_band_signature`
-    and `minhash_lsh_pairs` value oracles (the xxhash64 operators above
-    stay the scale path — one 64-bit hash per gram beats an md5 +
-    hex-slice).
-
-    Shape (r7): same ONE-aggregate-pass accumulator as r5/r6 (num_hashes
-    running minima folded via zip_with/least; 'g' sorts after every hex
-    digit so it is the identity; the nested-lambda form avoids the
-    `lambda g, i=i:` two-parameter HOF capture trap) — but the input scan
-    is now PARALLELIZED first (tables.parallel_scan): a small table is one
-    file split, so the grams x num_hashes interpreted md5 calls all ran on
-    a single core. Alternatives measured at sf0.1/local[32] and rejected:
-    a 32-column codegen min() aggregation (explode + flat md5 projections)
-    pays ~4 s of agg codegen+exec and a doc-keyed exchange (7.7 s cold vs
-    3.5 s here); a fully-exploded (gram, salt) min pays a 48M-row explode
-    (34 s). The zero-shuffle projection stays the best shape — it just
-    needed the scan width fixed."""
-    from inspectehr_spark.functions.textfns import word_ngrams
-    from inspectehr_spark.tables import parallel_scan
-
-    staged = parallel_scan(df.select(id_col, text_col)).withColumn(
-        "_toks", F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    )
-    staged = staged.withColumn(
-        "_grams", word_ngrams(F.col("_toks"), ngram)
-    ).filter(F.size("_grams") > 0)
-
-    def _md5s(g):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.md5(F.concat(g, F.lit("|"), i.cast("string"))),
-        )
-
-    sig_arr = F.aggregate(
-        F.col("_grams"),
-        F.array_repeat(F.lit("g"), num_hashes),
-        lambda acc, g: F.zip_with(acc, _md5s(g), lambda a, m: F.least(a, m)),
-    )
-    return staged.withColumn("_sig", sig_arr).select(id_col, "_sig")
-
-
 def shingle_dup_coverage(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -565,7 +603,7 @@ def substring_dup_stats(
     key (exchange reused) → doc-keyed agg. The shuffle key is the window
     hash, never the text. `hash_fn="md5"` is the oracle-replay contract;
     "xxhash64" halves shuffle width (BIGINT key) for deployments — the
-    same twin pattern as minhash_lsh_pairs_fast.
+    same `hash_fn` choice as minhash_lsh_duplicates.
 
     Reference analog: R/evaluate_duplication.R flags only coincident-key
     duplicates; cross-document verbatim spans are the web-corpus

@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from inspectehr_spark.functions import codes
+from inspectehr_spark.operators import dedup
 from inspectehr_spark.operators import episodes as E
+from inspectehr_spark.tables import parallel_scan
 from inspectehr_spark.tables import table as _t
 
 EPOCH_DAY0 = "2024-01-01"
@@ -571,42 +573,24 @@ MINHASH_NUM, MINHASH_BANDS = 16, 4
 
 
 def q_minhash_band_signature(spark, sf_dir):
-    """MinHash banded signature with ENGINE-REPLAYABLE hashes: h_i(gram) =
-    md5(gram || '|i'), signature element = lexicographic min per i, band
-    hash = md5 of its 4 concatenated elements. Same shingle → minhash →
-    band pipeline shape as dedup.minhash_lsh_duplicates (which uses
-    xxhash64 — engine-specific, rows-only checked); this variant gives the
-    dedup path a full DuckDB value oracle. Docs with < 3 tokens have no
-    shingles and are absent (both engines). Signature construction (and
-    its HOF lambda-capture trap) lives in dedup.md5_minhash_signature,
-    shared with the `minhash_lsh_pairs` oracle."""
-    from inspectehr_spark.operators.dedup import md5_minhash_signature
-
-    docs = _t(spark, sf_dir, "documents")
-    sig = md5_minhash_signature(docs, MINHASH_NUM).select(
-        "doc_id",
-        *[F.element_at("_sig", i + 1).alias(f"_h{i}") for i in range(MINHASH_NUM)],
-    )
-    per_band = MINHASH_NUM // MINHASH_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band_id"),
-                F.md5(
-                    F.concat(*[F.col(f"_h{b * per_band + j}") for j in range(per_band)])
-                ).alias("band_hash"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
+    """MinHash banded signature with ENGINE-REPLAYABLE hashes: the md5
+    family of dedup.minhash_signature (h_i(gram) = md5(gram || '|i'),
+    signature element = lexicographic min per i) cut into 4 bands, band
+    hash = md5 of its 4 concatenated elements (dedup._minhash_bands).
+    The same signature and band keys feed dedup.minhash_lsh_duplicates,
+    so this query gives the dedup path a full DuckDB value oracle. Docs
+    with < 3 tokens have no shingles and are absent (both engines)."""
+    docs = parallel_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    sig = dedup.minhash_signature(docs, MINHASH_NUM, "md5")
+    bands = dedup._minhash_bands(F.col("sig"), MINHASH_NUM, MINHASH_BANDS, "md5")
     return sig.select("doc_id", F.explode(bands).alias("f")).select(
-        "doc_id", F.col("f.band_id").alias("band_id"),
-        F.col("f.band_hash").alias("band_hash"),
+        "doc_id", F.col("f.band_id").cast("long").alias("band_id"),
+        F.col("f.band_key").alias("band_hash"),
     )
 
 
 def _minhash_sql() -> str:
-    per_band = MINHASH_NUM // MINHASH_BANDS
+    per_band = dedup._band_rows(MINHASH_NUM, MINHASH_BANDS)
     hs = ",\n    ".join(
         f"list_min(list_transform(g, x -> md5(x || '|{i}'))) AS h{i}"
         for i in range(MINHASH_NUM)

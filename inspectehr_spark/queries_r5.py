@@ -5,9 +5,9 @@ Technique = the md5 hash-replay the MinHash band-signature oracle proved
 (queries_episodes.q_minhash_band_signature): swap the engine-specific
 xxhash64 for md5-derived values BOTH engines compute identically, keep the
 operator structure (banding, caps, verification) bit-for-bit. SimHash has
-one implementation (dedup.with_simhash), md5-token-hashed, so the registry
-queries run the operator itself; the MinHash pair query replays the
-xxhash64 dedup.minhash_lsh_duplicates with md5 band hashes.
+one implementation (dedup.with_simhash), md5-token-hashed, and so does
+MinHash (dedup.minhash_lsh_duplicates, hash_fn="md5"), so the registry
+queries run the operators themselves.
 
 Replay primitives (cross-checked Spark↔DuckDB on fixtures):
   token hash halves:  Spark conv(substring(md5(t),1|9,8),16,10)::long
@@ -178,62 +178,25 @@ SQL_SIMHASH_HAMMING_PAIRS = _simhash_pairs_sql()
 # part of the query's semantics, not a free parameter.
 _MH_NUM, _MH_BANDS = 32, 16
 _MH_THRESHOLD, _MH_CAP = 0.5, 64
-_MH_PER_BAND = _MH_NUM // _MH_BANDS
+_MH_PER_BAND = dedup._band_rows(_MH_NUM, _MH_BANDS)
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH near-duplicate candidate pairs with FULL value oracle
-    (was rows-only r1-r4): the md5 band-signature replay
-    (q_minhash_band_signature) extended through the banded self-join,
-    hot-bucket cap and signature-agreement verification of
-    dedup.minhash_lsh_duplicates — same 32-hash / 16-band sketch as the
-    r1-r4 registry query. est_jaccard = agreeing elements / 32 — exact
-    multiples of 1/32 (2^-5), binary-representable, so the hash compare
-    is ulp-safe. Threshold 0.5 as before (the corpus plants exact dups,
-    not near-dups; constructed-near-dup exactness stays unit-tested)."""
-    docs = _t(spark, sf_dir, "documents")
-    # r7: persist the signature table (sketch-sized: one 32-element md5
-    # array per doc) so the md5 construction runs ONCE — the r5 shape
-    # recomputed the full signature subplan under BOTH sides of the banded
-    # self-join (the b side sat under a BroadcastExchange, so no exchange
-    # reuse fired). The heavy _sig arrays also no longer ride through the
-    # band explode / window / join: pairs are decided on (doc_id, band)
-    # alone and the two signatures join back by id for the agreement count.
-    sig = dedup.md5_minhash_signature(docs, _MH_NUM).persist()
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "",
-                        F.slice(F.col("_sig"), b * _MH_PER_BAND + 1, _MH_PER_BAND),
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(_MH_BANDS)
-        ]
-    )
-    pairs = dedup.band_pairs(sig, "doc_id", bands, _MH_CAP)
-    sa = sig.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("_sig").alias("_sa")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("_sig").alias("_sb")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda eq: eq
-            )
-        )
-        / F.lit(_MH_NUM)
-    ).alias("est_jaccard")
-    return (
-        pairs.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", est)
-        .filter(F.col("est_jaccard") >= _MH_THRESHOLD)
+    (was rows-only r1-r4): dedup.minhash_lsh_duplicates with the md5 hash
+    family, whose signature and band keys the SQL below replays — same
+    32-hash / 16-band sketch as the r1-r4 registry query. est_jaccard =
+    agreeing elements / 32 — exact multiples of 1/32 (2^-5),
+    binary-representable, so the hash compare is ulp-safe. Threshold 0.5
+    as before (the corpus plants exact dups, not near-dups;
+    constructed-near-dup exactness stays unit-tested)."""
+    return dedup.minhash_lsh_duplicates(
+        _t(spark, sf_dir, "documents"),
+        num_hashes=_MH_NUM,
+        bands=_MH_BANDS,
+        jaccard_threshold=_MH_THRESHOLD,
+        bucket_cap=_MH_CAP,
+        hash_fn="md5",
     )
 
 

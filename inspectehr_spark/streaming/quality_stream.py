@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inspectehr_spark.rules import Rule
+from inspectehr_spark.operators import dedup
 from inspectehr_spark.operators.checks import run_battery
 from inspectehr_spark.sources import snapshots as snap
 
@@ -422,10 +423,12 @@ def _near_dup_commit_batch(
     only — the documented recall trade every capped band join makes; the
     index itself is written UNCAPPED so history stays complete.
 
-    The streaming twin of the batch MinHash+LSH path
-    (operators/dedup.minhash_lsh_duplicates): the snapshot root carries
-    the BAND INDEX as history — table 'bands'(band_id, band_hash, _nd_id)
-    and table 'sigs'(_nd_id, _nd_sig) — so a batch document is a near-dup
+    The streaming form of the batch MinHash+LSH path: xxhash64
+    signatures from dedup.minhash_signature, within-batch pairs from the
+    same verified-pair step as dedup.minhash_lsh_duplicates. The
+    snapshot root carries the BAND INDEX as history — table
+    'bands'(band_id, band_hash, _nd_id) and table 'sigs'(_nd_id,
+    _nd_sig) — so a batch document is a near-dup
     when it shares a band with a committed survivor AND the signature
     agreement fraction >= `jaccard_threshold` (exact same banded-candidate
     → verify semantics as batch; band collisions alone never drop a doc).
@@ -446,137 +449,91 @@ def _near_dup_commit_batch(
     Scale: per batch this is (batch bands) ⋈ (history band index) — a
     keyed equi-join; persist the history 'bands' table bucketed by
     band_hash at 10^12-doc scale so the join is storage-partitioned."""
-    from inspectehr_spark.operators.dedup import (
-        cap_buckets,
-        with_minhash_signature,
-        with_shingles,
-    )
-
     if _replayed(root, ingest_id, batch_id):
         return 0
-    rows_per_band = num_hashes // bands
     spark = batch_df.sparkSession
+    band_arr = dedup._minhash_bands(F.col("sig"), num_hashes, bands, "xxhash64")
 
-    # persist: the shingle + num_hashes×xxhash64 signature pass is the
-    # dominant per-batch cost, and it feeds FOUR consumers (history join,
-    # both sides of the within-batch self-join, kept survivor signatures)
-    # — uncached it would recompute per consumer.
-    sigs = with_minhash_signature(
-        with_shingles(batch_df.select(F.col(id_col).alias("_nd_id"), text_col),
-                      text_col=text_col),
-        num_hashes=num_hashes,
-    ).filter(F.size("shingles") > 0).select(
-        "_nd_id", F.col("sig").alias("_nd_sig")
+    # persist: the signature pass is the dominant per-batch cost, and it
+    # feeds FOUR consumers (history join, both sides of the within-batch
+    # self-join, kept survivor signatures) — uncached it would recompute
+    # per consumer.
+    sigs = dedup.minhash_signature(
+        batch_df.select(F.col(id_col).alias("_nd_id"), text_col),
+        num_hashes, "xxhash64", text_col=text_col, id_col="_nd_id",
     ).persist()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.slice(F.col("_nd_sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = cap_buckets(
-        sigs.select("_nd_id", "_nd_sig", F.explode(band_arr).alias("b")).select(
-            "_nd_id", "_nd_sig", "b.band_id", "b.band_key"
-        ),
-        ["band_id", "band_key"],
-        "_nd_id",
-        bucket_cap,
-    )
-
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("_nd_sig", "_hist_sig", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        )
-        / F.lit(num_hashes)
-    )
-
+    cached = [sigs]
     try:
-        return _near_dup_join_and_commit(
-            batch_df, batch_id, root, id_col, banded, sigs, band_arr, est,
-            jaccard_threshold, bucket_cap, partition_col, ingest_id, spark,
-        )
-    finally:
-        sigs.unpersist()
+        # --- within-batch near-dups: the batch pair step, drop the larger id
+        losers = dedup._verified_pairs(
+            sigs, "_nd_id", num_hashes, bands, "xxhash64",
+            jaccard_threshold, bucket_cap,
+        ).select(F.col("_nd_id_b").alias("_nd_id"))
 
-
-def _near_dup_join_and_commit(
-    batch_df, batch_id, root, id_col, banded, sigs, band_arr, est,
-    jaccard_threshold, bucket_cap, partition_col, ingest_id, spark,
-) -> int:
-    from inspectehr_spark.operators.dedup import band_pairs, cap_buckets
-
-    # --- history near-dups: batch bands ⋈ committed band index ---
-    losers = None
-    try:
-        hist_bands = cap_buckets(
-            snap.read_table(spark, root, "bands").select(
-                "band_id",
-                F.col("band_hash").alias("band_key"),
+        # --- history near-dups: batch bands ⋈ committed band index ---
+        try:
+            hist_bands = dedup.cap_buckets(
+                snap.read_table(spark, root, "bands").select(
+                    "band_id",
+                    F.col("band_hash").alias("band_key"),
+                    F.col("_nd_id").alias("_hist_id"),
+                ),
+                ["band_id", "band_key"],
+                "_hist_id",
+                bucket_cap,
+            )
+            hist_sigs = snap.read_table(spark, root, "sigs").select(
                 F.col("_nd_id").alias("_hist_id"),
-            ),
-            ["band_id", "band_key"],
-            "_hist_id",
-            bucket_cap,
-        )
-        hist_sigs = snap.read_table(spark, root, "sigs").select(
-            F.col("_nd_id").alias("_hist_id"), F.col("_nd_sig").alias("_hist_sig")
-        )
-        cand = (
-            banded.join(hist_bands, ["band_id", "band_key"])
-            .select("_nd_id", "_nd_sig", "_hist_id")
-            .dropDuplicates(["_nd_id", "_hist_id"])
-            .join(hist_sigs, "_hist_id")
-        )
-        losers = cand.filter(est >= jaccard_threshold).select("_nd_id").distinct()
-    except FileNotFoundError:
-        pass                                   # first batch: empty history
+                F.col("_nd_sig").alias("_hist_sig"),
+            )
+            banded = dedup.cap_buckets(
+                sigs.select("_nd_id", "sig", F.explode(band_arr).alias("b"))
+                .select("_nd_id", "sig", "b.band_id", "b.band_key"),
+                ["band_id", "band_key"],
+                "_nd_id",
+                bucket_cap,
+            )
+            losers = losers.unionByName(
+                banded.join(hist_bands, ["band_id", "band_key"])
+                .select("_nd_id", "sig", "_hist_id")
+                .dropDuplicates(["_nd_id", "_hist_id"])
+                .join(hist_sigs, "_hist_id")
+                .filter(
+                    dedup._agreement("sig", "_hist_sig", num_hashes)
+                    >= jaccard_threshold
+                )
+                .select("_nd_id")
+            )
+        except FileNotFoundError:
+            pass                                   # first batch: empty history
 
-    # --- within-batch near-dups: banded self-join, drop the larger id ---
-    within_pairs = band_pairs(
-        sigs, "_nd_id", band_arr, bucket_cap, carry=("_nd_sig",)
-    ).select(
-        F.col("_nd_sig_a").alias("_nd_sig"),
-        F.col("_nd_sig_b").alias("_hist_sig"),
-        F.col("_nd_id_b").alias("_nd_id"),
-    )
-    within_losers = (
-        within_pairs.filter(est >= jaccard_threshold).select("_nd_id").distinct()
-    )
-    all_losers = (
-        within_losers if losers is None else losers.unionByName(within_losers)
-    ).distinct()
-
-    fresh = batch_df.join(
-        all_losers.withColumnRenamed("_nd_id", id_col), id_col, "left_anti"
-    ).persist()
-    try:
+        fresh = batch_df.join(
+            losers.distinct().withColumnRenamed("_nd_id", id_col),
+            id_col, "left_anti",
+        ).persist()
+        cached.append(fresh)
         if not fresh.take(1):
             return 0
         kept_sigs = sigs.join(
             fresh.select(F.col(id_col).alias("_nd_id")), "_nd_id"
         ).persist()
-        try:
-            kept_bands = kept_sigs.select(
-                "_nd_id", "_nd_sig", F.explode(band_arr).alias("b")
-            ).select("b.band_id", F.col("b.band_key").alias("band_hash"), "_nd_id")
-            _commit_batch_tables(
-                root,
-                {"stream": fresh, "bands": kept_bands, "sigs": kept_sigs},
-                batch_id, ingest_id, partition_col,
-            )
-            return fresh.count()
-        finally:
-            kept_sigs.unpersist()
+        cached.append(kept_sigs)
+        kept_bands = kept_sigs.select(
+            F.explode(band_arr).alias("b"), "_nd_id"
+        ).select("b.band_id", F.col("b.band_key").alias("band_hash"), "_nd_id")
+        _commit_batch_tables(
+            root,
+            {
+                "stream": fresh,
+                "bands": kept_bands,
+                "sigs": kept_sigs.select("_nd_id", F.col("sig").alias("_nd_sig")),
+            },
+            batch_id, ingest_id, partition_col,
+        )
+        return fresh.count()
     finally:
-        fresh.unpersist()
+        for df in cached:
+            df.unpersist()
 
 
 def near_dup_snapshot_sink(
@@ -598,7 +555,9 @@ def near_dup_snapshot_sink(
     in the snapshot store, giving the streaming path the same near-dup
     semantics the batch path has (verdict r4 stretch). Survivors, band
     index and signatures commit atomically per micro-batch; replay-safe
-    via (ingest_id, batch_id). Returns the started query."""
+    via (ingest_id, batch_id). Returns the started query; a `bands`
+    that does not divide `num_hashes` raises ValueError first."""
+    dedup._band_rows(num_hashes, bands)
     return _start_sink(
         stream, checkpoint_dir, trigger_once, ingest_id,
         lambda batch_df, batch_id, iid: _near_dup_commit_batch(

@@ -143,7 +143,7 @@ def test_drift_flags(spark):
 
 # --- dedup: minhash near-dup on constructed docs ------------------------------
 
-def test_minhash_finds_constructed_near_dups(spark):
+def test_minhash_finds_constructed_near_dups(spark, tmp_path):
     base = " ".join(f"w{i}" for i in range(200))
     near = " ".join(f"w{i}" for i in range(195)) + " x1 x2 x3 x4 x5"
     far = " ".join(f"z{i}" for i in range(200))
@@ -162,6 +162,36 @@ def test_minhash_finds_constructed_near_dups(spark):
     ).collect()[0]["jaccard"]
     # shared trigrams: windows fully inside w0..w194 → 193; union = 203
     assert jac == pytest.approx(193 / 203, abs=1e-6)
+    # 10 bands would band on only 60 of 64 hashes: refused, in the batch
+    # operator and before a streaming sink starts
+    from inspectehr_spark.streaming.quality_stream import near_dup_snapshot_sink
+
+    with pytest.raises(ValueError, match="bands must divide num_hashes"):
+        dedup.minhash_lsh_duplicates(df, num_hashes=64, bands=10)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="bands must divide num_hashes"):
+        near_dup_snapshot_sink(
+            spark.readStream.format("rate").load(), str(tmp_path / "root"),
+            str(tmp_path / "ckpt"), num_hashes=64, bands=10,
+        )
+    assert len(spark.streams.active) == active
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_minhash_shingle_less_docs_never_pair(spark, hash_fn):
+    """Docs under 3 tokens have no shingles and no signature, so even at
+    jaccard_threshold=0.0 they pair with nobody: with an all-NULL
+    signature they would share one NULL band bucket and pair with each
+    other at est_jaccard 0.0."""
+    long_doc = " ".join(f"w{i}" for i in range(20))
+    df = spark.createDataFrame(
+        [(1, "tiny"), (2, "two words"), (3, "also"), (4, long_doc)],
+        "doc_id long, text string",
+    )
+    out = dedup.minhash_lsh_duplicates(
+        df, num_hashes=16, bands=4, jaccard_threshold=0.0, hash_fn=hash_fn
+    )
+    assert out.collect() == []
 
 
 def test_simhash_close_for_near_dups(spark):
@@ -269,7 +299,7 @@ def test_simhash_hamming_pairs(spark):
         dedup.simhash_hamming_pairs(df, max_hamming=4, chunks=4)
 
 
-@pytest.mark.parametrize("op", ["minhash", "simhash"])
+@pytest.mark.parametrize("op", ["minhash-md5", "minhash-xxhash64", "simhash"])
 def test_band_join_hot_bucket_cap(spark, op):
     """cap + 3 identical documents put every band in one hot bucket: the
     band join keeps the `cap` lowest ids of that bucket, so the result is
@@ -283,9 +313,10 @@ def test_band_join_hot_bucket_cap(spark, op):
     df = spark.createDataFrame(
         [(i, text) for i in ids], "doc_id long, text string"
     )
-    if op == "minhash":
+    if op.startswith("minhash"):
         out = dedup.minhash_lsh_duplicates(
-            df, num_hashes=16, bands=4, jaccard_threshold=0.5, bucket_cap=cap
+            df, num_hashes=16, bands=4, jaccard_threshold=0.5, bucket_cap=cap,
+            hash_fn=op.split("-")[1],
         )
     else:
         out = dedup.simhash_hamming_pairs(

@@ -107,6 +107,18 @@ def test_minhash_signature_no_shuffle(spark, sf_dir):
     assert inspect.exchange_count(df) <= 1, inspect.formatted_plan(df)
 
 
+def test_minhash_queries_leave_no_persisted_rdd(spark, sf_dir):
+    """The MinHash queries carry the signature through the band join
+    instead of persisting it: building and collecting them leaves the
+    session's persisted RDDs as they were."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for name in ("minhash_lsh_pairs", "minhash_lsh_pairs_fast",
+                 "minhash_band_signature"):
+        QUERIES[name][0](spark, sf_dir).collect()
+        assert jsc.getPersistentRDDs().size() == before, name
+
+
 def test_ivf_assignment_zero_shuffle(spark, sf_dir):
     """IVF assignment is a literal-array argmax projection (VERDICT r2 #1):
     the plan must contain NO Exchange keyed on vec_id between assignment
